@@ -1,17 +1,24 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.sources.Bronze
 
 /** End-to-end medallion pipeline — the reference's Airflow DAG collapsed
   * into in-process composition (SURVEY.md §2.10 O1-O4): bronze (parquet
-  * at rest) → silver (cleansed) → gold (analytics), executed sequentially
-  * in ONE SparkSession, followed by REAL validation (the reference's
-  * validation task is an `echo` stub, reference `dags/dag.py:73-77`, and
-  * every stage swallows its own failures via try/except print —
-  * `to_bronze.py:52-53` — which this pipeline deliberately does not:
-  * failures propagate).
+  * at rest) → silver (cleansed) → gold (analytics) in ONE SparkSession,
+  * followed by REAL validation (the reference's validation task is an
+  * `echo` stub, reference `dags/dag.py:73-77`, and every stage swallows
+  * its own failures via try/except print — `to_bronze.py:52-53` — which
+  * this pipeline deliberately does not: failures propagate).
+  *
+  * Zones run in order. The tables within a zone, and the per-table
+  * validation queries, are independent, so they run concurrently (see
+  * [[concurrently]]); a failing table still fails the call, after its
+  * siblings have finished.
   *
   * Scale note: stages communicate through parquet paths, not driver
   * memory; each stage is an independent Spark job graph, so a scheduler
@@ -24,43 +31,113 @@ object Pipeline {
 
   /** Silver zone: cleansed tables written to `$outDir/silver/<t>`. */
   def runSilver(spark: SparkSession, sfDir: String,
-      outDir: String): Seq[StageResult] = {
-    val stages: Seq[(String, DataFrame)] = Seq(
-      "orders"   -> Silver.orders(spark, sfDir),
-      "customer" -> Silver.customer(spark, sfDir),
-      "lineitem" -> Silver.lineitem(spark, sfDir),
-      "part"     -> Silver.part(spark, sfDir),
-      "supplier" -> Silver.supplier(spark, sfDir),
-      "events"   -> Silver.events(spark, sfDir))
-    stages.map { case (name, df) =>
-      val path = s"$outDir/silver/$name"
-      Bronze.writeParquet(df, path)
-      StageResult("silver", name, spark.read.parquet(path).count(), path)
-    }
-  }
+      outDir: String): Seq[StageResult] =
+    writeStages(outDir, "silver", Seq(
+      "orders"   -> Silver.ordersStage(Tables.orders(spark, sfDir)),
+      "customer" -> Silver.customerStage(Tables.customer(spark, sfDir)),
+      "lineitem" -> Silver.lineitemStage(Tables.lineitem(spark, sfDir)),
+      "part"     -> Silver.partStage(Tables.part(spark, sfDir),
+        Tables.nation(spark, sfDir)),
+      "supplier" -> Silver.supplierStage(Tables.supplier(spark, sfDir)),
+      "events"   -> Silver.eventsStage(Tables.events(spark, sfDir))))
 
-  /** Gold zone: analytics tables written to `$outDir/gold/<t>`. */
+  /** Gold zone: analytics tables written to `$outDir/gold/<t>`. Each raw
+    * table is loaded once and shared by the stages that read it. */
   def runGold(spark: SparkSession, sfDir: String,
       outDir: String): Seq[StageResult] = {
-    val stages: Seq[(String, DataFrame)] = Seq(
-      "daily_sales"          -> Gold.dailySales(spark, sfDir),
-      "customer_metrics"     -> Gold.customerMetrics(spark, sfDir),
-      "product_performance"  -> Gold.productPerformance(spark, sfDir),
-      "seller_performance"   -> Gold.sellerPerformance(spark, sfDir),
-      "satisfaction_metrics" -> Gold.satisfactionMetrics(spark, sfDir),
-      "delivery_performance" -> Gold.deliveryPerformance(spark, sfDir))
-    stages.map { case (name, df) =>
-      val path = s"$outDir/gold/$name"
-      Bronze.writeParquet(df, path)
-      StageResult("gold", name, spark.read.parquet(path).count(), path)
+    val li = Tables.lineitem(spark, sfDir)
+    val ord = Tables.orders(spark, sfDir)
+    writeStages(outDir, "gold", Seq(
+      "daily_sales"          -> Gold.dailySalesStage(li, ord),
+      "customer_metrics"     -> Gold.customerMetricsStage(li, ord,
+        Tables.customer(spark, sfDir)),
+      "product_performance"  -> Gold.productPerformanceStage(li,
+        Tables.part(spark, sfDir)),
+      "seller_performance"   -> Gold.sellerPerformanceStage(li,
+        Tables.supplier(spark, sfDir), ord),
+      "satisfaction_metrics" -> Gold.satisfactionMetricsStage(
+        Tables.events(spark, sfDir)),
+      "delivery_performance" -> Gold.deliveryPerformanceStage(li, ord)))
+  }
+
+  /** Writes each `(table, frame)` to `$outDir/$zone/<table>` concurrently.
+    * A stage's row count is observed on the write itself, so no table is
+    * read back to count it. The observed count reaches the driver through
+    * the listener bus after the write returns; a count that never arrives
+    * (a dropped event) fails the stage after two minutes instead of
+    * hanging it.
+    */
+  private[graft] def writeStages(outDir: String, zone: String,
+      stages: Seq[(String, DataFrame)]): Seq[StageResult] =
+    concurrently(stages.map { case (table, df) =>
+      val path = s"$outDir/$zone/$table"
+      val rows = Observation()
+      val counted = df.observe(rows, count(lit(1)))
+      () => {
+        Bronze.writeParquet(counted, path)
+        val n = Await.result(rows.future, ObservedCountTimeout).getLong(0)
+        StageResult(zone, table, n, path)
+      }
+    })
+
+  private val ObservedCountTimeout = 2.minutes
+
+  /** Runs every task at once, one thread per task, and returns their
+    * results in task order once all have finished; the first failure in
+    * task order is rethrown then. The threads are created by this call, so
+    * they inherit the caller's Spark local properties (job group,
+    * description, scheduler pool), and none outlives it. Build DataFrames
+    * before calling: only actions belong in a task, since building one can
+    * set session conf (`Tables.events`).
+    */
+  private[graft] def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+    val results = new Array[Either[Throwable, A]](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      new Thread(() => results(i) =
+        try Right(task()) catch { case e: Throwable => Left(e) },
+        s"graft-concurrently-$i")
     }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    results.toSeq.map(_.fold(e => throw e, identity))
   }
 
   case class CheckResult(zone: String, table: String, check: String,
       passed: Boolean, detail: String)
 
+  private def nonEmpty(zone: String, table: String, rows: Long) =
+    CheckResult(zone, table, "non_empty", rows > 0, s"rows=$rows")
+
+  /** Row count, distinct keys and null keys of one table. */
+  private[graft] case class KeyStats(rows: Long, distinct: Long,
+      nulls: Long) {
+    /** The `non_empty` and `pk_unique(key)` verdicts of the table. */
+    def uniqueChecks(zone: String, table: String,
+        key: String): Seq[CheckResult] =
+      Seq(nonEmpty(zone, table, rows),
+        CheckResult(zone, table, s"pk_unique($key)", distinct == rows,
+          s"distinct=$distinct rows=$rows"))
+  }
+
+  /** [[KeyStats]] of `df` from one aggregate: per-key counts, then one
+    * global row. A null key is one group, so it counts as one distinct
+    * value, as in `select(key).distinct()`. The query is built here; the
+    * returned function runs it.
+    */
+  private[graft] def keyStats(df: DataFrame, key: String): () => KeyStats = {
+    val q = df.groupBy(key).agg(count(lit(1)).as("n"))
+      .agg(coalesce(sum("n"), lit(0L)), count(lit(1)),
+        coalesce(sum(when(col(key).isNull, col("n"))), lit(0L)))
+    () => {
+      val r = q.head()
+      KeyStats(r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+  }
+
   /** REAL validation (replaces the reference's echo stub): non-emptiness,
-    * primary-key uniqueness, and non-null key constraints per zone.
+    * primary-key uniqueness, and non-null key constraints per zone. Every
+    * table directory under `$outDir/silver` and `$outDir/gold` is checked
+    * with one query; a missing zone directory is an error.
     */
   def validate(spark: SparkSession, outDir: String): Seq[CheckResult] = {
     val keys = Map(
@@ -69,26 +146,27 @@ object Pipeline {
       ("silver", "part")     -> "p_partkey",
       ("silver", "supplier") -> "s_suppkey",
       ("silver", "events")   -> "event_id")
-    val zones = Seq("silver", "gold")
-    zones.flatMap { zone =>
+    val checks = Seq("silver", "gold").flatMap { zone =>
       val base = new java.io.File(s"$outDir/$zone")
-      base.listFiles().toSeq.sortBy(_.getName).flatMap { dir =>
-        val table = dir.getName
-        val df = spark.read.parquet(dir.getPath)
-        val n = df.count()
-        val nonEmpty = CheckResult(zone, table, "non_empty", n > 0, s"rows=$n")
-        val keyChecks = keys.get((zone, table)).toSeq.flatMap { k =>
-          val distinct = df.select(k).distinct().count()
-          val nulls = df.filter(col(k).isNull).count()
-          Seq(
-            CheckResult(zone, table, s"pk_unique($k)", distinct == n,
-              s"distinct=$distinct rows=$n"),
-            CheckResult(zone, table, s"pk_not_null($k)", nulls == 0,
-              s"nulls=$nulls"))
+      if (!base.isDirectory) throw new java.io.FileNotFoundException(
+        s"validate: zone directory ${base.getPath} does not exist")
+      base.listFiles().toSeq.filter(_.isDirectory).sortBy(_.getName)
+        .map { dir =>
+          val table = dir.getName
+          val df = spark.read.parquet(dir.getPath)
+          keys.get((zone, table)) match {
+            case None => () => Seq(nonEmpty(zone, table, df.count()))
+            case Some(k) =>
+              val stats = keyStats(df, k)
+              () => {
+                val s = stats()
+                s.uniqueChecks(zone, table, k) :+ CheckResult(zone, table,
+                  s"pk_not_null($k)", s.nulls == 0, s"nulls=${s.nulls}")
+              }
+          }
         }
-        nonEmpty +: keyChecks
-      }
     }
+    concurrently(checks).flatten
   }
 
   /** Full run: silver → gold → validate; throws if any check fails. */
@@ -123,7 +201,6 @@ object Pipeline {
     */
   def runAllJdbc(spark: SparkSession, sfDir: String,
       url: String): Seq[String] = {
-    import graft.Tables
     val raw: Seq[(String, DataFrame)] = Seq(
       "orders"   -> Tables.orders(spark, sfDir),
       "customer" -> Tables.customer(spark, sfDir),

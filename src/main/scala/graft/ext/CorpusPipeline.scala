@@ -3,8 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.etl.Pipeline
 import graft.etl.Pipeline.{CheckResult, StageResult}
-import graft.sources.Bronze
 
 /** End-to-end training-data curation pipeline — the corpus-side
   * counterpart of [[graft.etl.Pipeline]]'s medallion run, composing the
@@ -66,45 +66,48 @@ object CorpusPipeline {
 
   def runStages(spark: SparkSession, sfDir: String,
       outDir: String): Seq[StageResult] =
-    stages(spark, sfDir).map { case (name, df) =>
-      val path = s"$outDir/corpus/$name"
-      Bronze.writeParquet(df, path)
-      StageResult("corpus", name, spark.read.parquet(path).count(), path)
-    }
+    Pipeline.writeStages(outDir, "corpus", stages(spark, sfDir))
 
   /** Real validation over the written stages; every check one verdict
     * row, mirroring [[graft.etl.Pipeline.validate]].
     */
   def validate(spark: SparkSession, outDir: String): Seq[CheckResult] = {
     def load(name: String) = spark.read.parquet(s"$outDir/corpus/$name")
-    def pkUnique(name: String, df: DataFrame): Seq[CheckResult] = {
-      val n = df.count()
-      val d = df.select("doc_id").distinct().count()
-      Seq(CheckResult("corpus", name, "non_empty", n > 0, s"rows=$n"),
-        CheckResult("corpus", name, "pk_unique(doc_id)", d == n,
-          s"distinct=$d rows=$n"))
+    def pkUnique(name: String, df: DataFrame): () => Seq[CheckResult] = {
+      val stats = Pipeline.keyStats(df, "doc_id")
+      () => stats().uniqueChecks("corpus", name, "doc_id")
     }
     val screen = load("screen")
     val despan = load("despan")
     val curriculum = load("curriculum")
-    val screenKept = screen.filter(col("keep")).count()
-    val screenAll = screen.count()
-    val badFrac = despan
-      .filter(col("kept_frac") < 0.0 || col("kept_frac") > 1.0).count()
-    val phaseDomain = curriculum.select("phase").distinct().count()
-    pkUnique("screen", screen) ++
-      pkUnique("despan", despan) ++
-      pkUnique("dedup_exact", load("dedup_exact")) ++
-      pkUnique("dedup_incremental", load("dedup_incremental")) ++
-      pkUnique("curriculum", curriculum) ++ Seq(
-      CheckResult("corpus", "screen", "keeps_nonzero_fraction",
-        screenKept > 0 && screenKept <= screenAll,
-        s"kept=$screenKept of=$screenAll"),
-      CheckResult("corpus", "despan", "kept_frac_in_unit_interval",
-        badFrac == 0, s"out_of_range=$badFrac"),
-      CheckResult("corpus", "curriculum", "phase_domain_complete",
-        phaseDomain == Curation.CurriculumPhases,
-        s"phases=$phaseDomain want=${Curation.CurriculumPhases}"))
+    val kept = screen.filter(col("keep"))
+    val outOfRange = despan
+      .filter(col("kept_frac") < 0.0 || col("kept_frac") > 1.0)
+    val phases = curriculum.select("phase").distinct()
+    Pipeline.concurrently(Seq(
+      pkUnique("screen", screen),
+      pkUnique("despan", despan),
+      pkUnique("dedup_exact", load("dedup_exact")),
+      pkUnique("dedup_incremental", load("dedup_incremental")),
+      pkUnique("curriculum", curriculum),
+      () => {
+        val screenKept = kept.count()
+        val screenAll = screen.count()
+        Seq(CheckResult("corpus", "screen", "keeps_nonzero_fraction",
+          screenKept > 0 && screenKept <= screenAll,
+          s"kept=$screenKept of=$screenAll"))
+      },
+      () => {
+        val badFrac = outOfRange.count()
+        Seq(CheckResult("corpus", "despan", "kept_frac_in_unit_interval",
+          badFrac == 0, s"out_of_range=$badFrac"))
+      },
+      () => {
+        val phaseDomain = phases.count()
+        Seq(CheckResult("corpus", "curriculum", "phase_domain_complete",
+          phaseDomain == Curation.CurriculumPhases,
+          s"phases=$phaseDomain want=${Curation.CurriculumPhases}"))
+      })).flatten
   }
 
   /** Full run: stages → validate; throws if any check fails. */
