@@ -8,11 +8,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Postgres (reference `include/scripts/to_bronze.py:39-50`); our engine
   * standardizes on Parquet at rest — columnar, splittable, self-describing —
   * which is what a 100 TB deployment would use. Parquet footers carry the
-  * schema, so reads are deterministic (no inference pass) and Catalyst
-  * pushes filters/projections into the scan (`PushedFilters`/`ReadSchema`).
+  * schema, so reads are deterministic and Catalyst pushes
+  * filters/projections into the scan (`PushedFilters`/`ReadSchema`).
+  * Every load goes through [[graft.sources.Bronze.readParquet]], which
+  * reads the first data file's footer on the driver: no Spark job runs
+  * to learn the schema (plain `spark.read.parquet` runs one per call).
   *
   * Scale note: each table maps to a directory of row-group-split files on a
-  * real cluster; `spark.read.parquet` parallelizes by row-group natively, so
+  * real cluster; the parquet scan parallelizes by row-group natively, so
   * nothing here needs to change between local[32] and 1000 executors.
   */
 object Tables {
@@ -21,7 +24,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.Bronze.readParquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -153,7 +153,7 @@ object Pipeline {
       base.listFiles().toSeq.filter(_.isDirectory).sortBy(_.getName)
         .map { dir =>
           val table = dir.getName
-          val df = spark.read.parquet(dir.getPath)
+          val df = Bronze.readParquet(spark, dir.getPath)
           keys.get((zone, table)) match {
             case None => () => Seq(nonEmpty(zone, table, df.count()))
             case Some(k) =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.etl.Pipeline
 import graft.etl.Pipeline.{CheckResult, StageResult}
+import graft.sources.Bronze
 
 /** End-to-end training-data curation pipeline — the corpus-side
   * counterpart of [[graft.etl.Pipeline]]'s medallion run, composing the
@@ -72,7 +73,7 @@ object CorpusPipeline {
     * row, mirroring [[graft.etl.Pipeline.validate]].
     */
   def validate(spark: SparkSession, outDir: String): Seq[CheckResult] = {
-    def load(name: String) = spark.read.parquet(s"$outDir/corpus/$name")
+    def load(name: String) = Bronze.readParquet(spark, s"$outDir/corpus/$name")
     def pkUnique(name: String, df: DataFrame): () => Seq[CheckResult] = {
       val stats = Pipeline.keyStats(df, "doc_id")
       () => stats().uniqueChecks("corpus", name, "doc_id")

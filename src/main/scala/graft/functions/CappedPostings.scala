@@ -80,13 +80,15 @@ class CappedPostingsAgg(cap: Long, stride: Int)
 
   /** Ensure room for `extra` more longs: amortized doubling, never past
     * the cap's worst case (so a spilled/shipped partial's slack is
-    * bounded too).
+    * bounded too). A need past that ceiling is an error, not a clamp.
     */
   private def grow(b: CappedWorkBuf, extra: Int): Unit = {
-    val need = b.used + extra
+    val need = b.used.toLong + extra
     if (need > b.ds.length) {
-      val cap2 = math.min(maxLongs,
-        math.max(need, math.max(stride, b.ds.length * 2)))
+      require(need <= maxLongs,
+        s"capped posting buffer needs $need longs, over its $maxLongs bound")
+      val cap2 = math.min(maxLongs.toLong,
+        math.max(need, math.max(stride.toLong, b.ds.length * 2L))).toInt
       val out = new Array[Long](cap2)
       System.arraycopy(b.ds, 0, out, 0, b.used)
       b.ds = out

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * Output field NAMES are parameters so both consumers keep their
   * schema (`doc_a`/`doc_b`, `src`/`dst`). Input lists are bounded by
   * contract (df-capped posting lists / maxOrderItems-capped orders), so
-  * the quadratic fan-out stays bounded; the `n ≤ 65535` guard turns an
-  * unexpected unbounded list into a loud error instead of silent OOM.
+  * the quadratic fan-out stays bounded; [[OrderedPairs.count]] turns a
+  * list whose pairs no JVM array can hold into a loud error.
   */
 case class OrderedPairs(child: Expression, aName: String, bName: String)
     extends UnaryExpression {
@@ -38,8 +38,7 @@ case class OrderedPairs(child: Expression, aName: String, bName: String)
 
   def pairs(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
-    require(n <= 65535, s"ordered-pair fan-out unbounded: $n elements")
-    val out = new Array[Any](n * (n - 1) / 2)
+    val out = new Array[Any](OrderedPairs.count(n))
     var idx = 0
     var i = 0
     while (i < n) {
@@ -71,6 +70,19 @@ case class OrderedPairs(child: Expression, aName: String, bName: String)
 }
 
 object OrderedPairs {
+  /** Largest array the JVM allocates. */
+  private val MaxPairs: Int = Int.MaxValue - 8
+
+  /** `n·(n−1)/2`, computed in Long so it cannot wrap; fails when the
+    * pairs would not fit one array.
+    */
+  def count(n: Int): Int = {
+    val pairs = n.toLong * (n - 1) / 2
+    require(pairs <= MaxPairs,
+      s"ordered-pair fan-out unbounded: $n elements, $pairs pairs")
+    pairs.toInt
+  }
+
   def of(arr: Column, aName: String, bName: String): Column =
     org.apache.spark.sql.GraftBridge.column(OrderedPairs(
       org.apache.spark.sql.GraftBridge.expression(arr), aName, bName))

@@ -82,8 +82,8 @@ object AnnIndex {
     */
   def appendIvfPq(spark: SparkSession, newVecs: DataFrame,
       dir: String): Unit = {
-    val cents = spark.read.parquet(s"$dir/coarse_codebook")
-    val books = spark.read.parquet(s"$dir/pq_books")
+    val cents = Bronze.readParquet(spark, s"$dir/coarse_codebook")
+    val books = Bronze.readParquet(spark, s"$dir/pq_books")
     Similarity.codedListsNarrow(newVecs, cents, books)
       .write.mode("append").partitionBy("centroid_id")
       .parquet(s"$dir/codes")
@@ -100,13 +100,13 @@ object AnnIndex {
       embRaw: DataFrame, k: Int = Similarity.TopK,
       shortlist: Int = Similarity.PqShortlist,
       probesN: Int = Similarity.Probes): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/coarse_codebook")
-    val books = spark.read.parquet(s"$dir/pq_books")
+    val cents = Bronze.readParquet(spark, s"$dir/coarse_codebook")
+    val books = Bronze.readParquet(spark, s"$dir/pq_books")
     // bounded driver artifact: the distinct probed lists
     val probed = Similarity.ivfProbes(embRaw, cents, probesN)
       .select("centroid_id").distinct()
       .collect().map(_.getInt(0))
-    val coded = spark.read.parquet(s"$dir/codes")
+    val coded = Bronze.readParquet(spark, s"$dir/codes")
       .filter(col("centroid_id").isin(probed.map(Int.box): _*))
       .select("vec_id", "sub_id", "code", "centroid_id")
     Similarity.ivfPqServe(embRaw, cents, books, coded, k, shortlist,

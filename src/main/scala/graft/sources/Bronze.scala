@@ -129,6 +129,85 @@ object Bronze {
       .parquet(path)
   }
 
+  /** S2: Parquet source — `spark.read.parquet(path)` without the Spark
+    * job. Spark's non-merging schema inference reads ONE footer, the
+    * first data file in path order, but it does so in a one-task job
+    * per call (`mergeSchemasInParallel`), run on the calling thread
+    * before anything else can start. Here the same footer is read on the
+    * driver with the same rules: the listing recurses with Spark's
+    * hidden-name filter (`_SUCCESS`, `.crc`, `_temporary` skipped;
+    * `k=v` directories kept), Spark's own schema JSON wins when the
+    * footer holds one, and otherwise the parquet schema is converted
+    * under the same session flags (`nanosAsLong` and friends). The
+    * result goes in as the read schema; it holds only the files'
+    * columns, so Spark's file index still discovers partition columns.
+    *
+    * Anything outside that path — schema merging on, summary files
+    * present (Spark prefers them), no data file, a missing path or an
+    * unreadable footer — falls back to plain `spark.read.parquet`, so
+    * Spark applies its own rules and raises its own errors.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetReadSupport, ParquetToSparkSchemaConverter}
+    import scala.util.control.NonFatal
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq
+        .filterNot(s => org.apache.spark.sql.GraftBridge
+          .hiddenPathName(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) leaves(fs, s.getPath) else Seq(s))
+    def firstDataFile: Option[FileStatus] = {
+      val files =
+        try {
+          val root = new Path(path)
+          leaves(root.getFileSystem(hadoopConf), root)
+            .sortBy(_.getPath.toString)
+        } catch { case NonFatal(_) => Nil }
+      val summary = files.exists(f =>
+        Set("_metadata", "_common_metadata")(f.getPath.getName))
+      if (summary) None else files.headOption
+    }
+    if (conf.isParquetSchemaMergingEnabled) None
+    else firstDataFile.flatMap { f =>
+      try {
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromStatus(f, hadoopConf),
+          HadoopReadOptions.builder(hadoopConf)
+            .withMetadataFilter(SKIP_ROW_GROUPS).build())
+        val meta = try reader.getFileMetaData finally reader.close()
+        Option(meta.getKeyValueMetaData.get(
+            ParquetReadSupport.SPARK_METADATA_KEY)) match {
+          // a schema string Spark cannot parse as JSON (pre-1.4 writers)
+          // goes to Spark's legacy parser through the fallback
+          case Some(json) => Some(DataType.fromJson(json))
+            .collect { case s: StructType => s }
+          case None => Some(new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation =
+              conf.parquetReaderRespectUnknownTypeAnnotation)
+            .convert(meta.getSchema))
+        }
+      } catch { case NonFatal(_) => None }
+    }
+  }
+
   /** Schema-evolution read: union the schemas of all parquet footers
     * under `path` (columns added by newer writers come back null-filled
     * on old files). Off by default in Spark because it reads every
@@ -265,8 +344,8 @@ object Bronze {
             .as("quarter"))
         .distinct(),
       dimPath)
-    val fact = spark.read.parquet(factPath)
-    val dim = spark.read.parquet(dimPath)
+    val fact = readParquet(spark, factPath)
+    val dim = readParquet(spark, dimPath)
     fact.join(dim.filter(col("quarter") === 1L), Seq("month"))
       .groupBy("month")
       .agg(count(lit(1)).as("n_orders"),

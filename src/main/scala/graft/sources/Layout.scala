@@ -114,7 +114,7 @@ object Layout {
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int, sortKey: Option[String] = None): Unit = {
     recover(spark, path)
-    val df = spark.read.parquet(path)
+    val df = Bronze.readParquet(spark, path)
     val arranged = sortKey match {
       case Some(k) =>
         df.repartitionByRange(targetFiles, col(k)).sortWithinPartitions(k)

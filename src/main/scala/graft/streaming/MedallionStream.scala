@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.etl.{Gold, Silver}
-import graft.sources.Scratch
+import graft.sources.{Bronze, Scratch}
 
 /** Incremental medallion: the batch bronze→silver→gold pipeline
   * ([[graft.etl.Pipeline]], reference `dags/dag.py:39-80`) re-expressed
@@ -79,7 +79,8 @@ object MedallionStream {
     UpsertSink.applyBatch(Silver.ordersStage(batch), silverPath,
       Seq("o_orderkey"))
     val spark = batch.sparkSession
-    val gold = dailySalesFromSilver(liStatic, spark.read.parquet(silverPath))
+    val gold =
+      dailySalesFromSilver(liStatic, Bronze.readParquet(spark, silverPath))
     UpsertSink.stagedOverwrite(gold, goldPath)
   }
 
@@ -91,7 +92,7 @@ object MedallionStream {
   def runAvailableNow(spark: SparkSession, srcDir: String,
       liStatic: DataFrame, workDir: String,
       maxFilesPerTrigger: Int = 1): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = Bronze.readParquet(spark, srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
@@ -132,7 +133,7 @@ object MedallionStream {
       .write.parquet(src)
     runAvailableNow(spark, src, graft.Tables.lineitem(spark, sfDir),
       root.getPath)
-    spark.read.parquet(s"${root.getPath}/gold_daily_sales")
+    Bronze.readParquet(spark, s"${root.getPath}/gold_daily_sales")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

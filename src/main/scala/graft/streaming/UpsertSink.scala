@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.MergeUpsert
+import graft.sources.Bronze
 
 /** Streaming MERGE sink: maintain a keyed parquet snapshot from a stream
   * of upserts via `foreachBatch` — the pattern that turns an append-only
@@ -65,7 +66,7 @@ object UpsertSink {
         s"recovery rename failed: $staged -> $target")
     val deduped = batch.dropDuplicates(keys)
     val prior =
-      try Some(spark.read.parquet(targetPath))
+      try Some(Bronze.readParquet(spark, targetPath))
       catch {
         // ONLY a missing path means "first batch"; any other failure
         // (corrupt footer, permissions, ...) must abort the epoch

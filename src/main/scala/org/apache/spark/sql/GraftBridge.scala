@@ -26,6 +26,13 @@ object GraftBridge {
       case _ => ()
     }
 
+  /** Spark's file-listing filter: true for a name its file index skips
+    * (`_`/`.`-prefixed, except `k=v` directories and parquet summary
+    * files).
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Drain the async listener bus (QueryExecutionListener events ride it)
     * so a tool that collects executed plans reads a complete sink.
     */
