@@ -32,32 +32,52 @@ object Pipeline {
   /** Silver zone: cleansed tables written to `$outDir/silver/<t>`. */
   def runSilver(spark: SparkSession, sfDir: String,
       outDir: String): Seq[StageResult] =
-    writeStages(outDir, "silver", Seq(
-      "orders"   -> Silver.ordersStage(Tables.orders(spark, sfDir)),
-      "customer" -> Silver.customerStage(Tables.customer(spark, sfDir)),
-      "lineitem" -> Silver.lineitemStage(Tables.lineitem(spark, sfDir)),
-      "part"     -> Silver.partStage(Tables.part(spark, sfDir),
-        Tables.nation(spark, sfDir)),
-      "supplier" -> Silver.supplierStage(Tables.supplier(spark, sfDir)),
-      "events"   -> Silver.eventsStage(Tables.events(spark, sfDir))))
+    writeStages(outDir, "silver", silverStages(parquetRaw(spark, sfDir)))
 
-  /** Gold zone: analytics tables written to `$outDir/gold/<t>`. Each raw
-    * table is loaded once and shared by the stages that read it. */
+  /** Gold zone: analytics tables written to `$outDir/gold/<t>`. */
   def runGold(spark: SparkSession, sfDir: String,
-      outDir: String): Seq[StageResult] = {
-    val li = Tables.lineitem(spark, sfDir)
-    val ord = Tables.orders(spark, sfDir)
-    writeStages(outDir, "gold", Seq(
+      outDir: String): Seq[StageResult] =
+    writeStages(outDir, "gold", goldStages(parquetRaw(spark, sfDir)))
+
+  /** The raw tables the zones read: the bronze zone. */
+  private val RawTables = Seq("orders", "customer", "lineitem", "part",
+    "supplier", "nation", "events")
+
+  /** Loads raw table `t` from the parquet fixtures; `events` goes through
+    * its footer-adapting loader. */
+  private def parquetRaw(spark: SparkSession, sfDir: String)(
+      t: String): DataFrame =
+    if (t == "events") Tables.events(spark, sfDir)
+    else Tables.load(spark, sfDir, t)
+
+  /** The silver zone's `(table, frame)` stages over raw tables from
+    * `raw`. */
+  private def silverStages(
+      raw: String => DataFrame): Seq[(String, DataFrame)] = Seq(
+    "orders"   -> Silver.ordersStage(raw("orders")),
+    "customer" -> Silver.customerStage(raw("customer")),
+    "lineitem" -> Silver.lineitemStage(raw("lineitem")),
+    "part"     -> Silver.partStage(raw("part"), raw("nation")),
+    "supplier" -> Silver.supplierStage(raw("supplier")),
+    "events"   -> Silver.eventsStage(raw("events")))
+
+  /** The gold zone's `(table, frame)` stages over raw tables from `raw`.
+    * `lineitem` and `orders` are loaded once and shared by the stages
+    * that read them. */
+  private def goldStages(
+      raw: String => DataFrame): Seq[(String, DataFrame)] = {
+    val li = raw("lineitem")
+    val ord = raw("orders")
+    Seq(
       "daily_sales"          -> Gold.dailySalesStage(li, ord),
       "customer_metrics"     -> Gold.customerMetricsStage(li, ord,
-        Tables.customer(spark, sfDir)),
+        raw("customer")),
       "product_performance"  -> Gold.productPerformanceStage(li,
-        Tables.part(spark, sfDir)),
+        raw("part")),
       "seller_performance"   -> Gold.sellerPerformanceStage(li,
-        Tables.supplier(spark, sfDir), ord),
-      "satisfaction_metrics" -> Gold.satisfactionMetricsStage(
-        Tables.events(spark, sfDir)),
-      "delivery_performance" -> Gold.deliveryPerformanceStage(li, ord)))
+        raw("supplier"), ord),
+      "satisfaction_metrics" -> Gold.satisfactionMetricsStage(raw("events")),
+      "delivery_performance" -> Gold.deliveryPerformanceStage(li, ord))
   }
 
   /** Writes each `(table, frame)` to `$outDir/$zone/<table>` concurrently.
@@ -201,43 +221,15 @@ object Pipeline {
     */
   def runAllJdbc(spark: SparkSession, sfDir: String,
       url: String): Seq[String] = {
-    val raw: Seq[(String, DataFrame)] = Seq(
-      "orders"   -> Tables.orders(spark, sfDir),
-      "customer" -> Tables.customer(spark, sfDir),
-      "lineitem" -> Tables.lineitem(spark, sfDir),
-      "part"     -> Tables.part(spark, sfDir),
-      "supplier" -> Tables.supplier(spark, sfDir),
-      "nation"   -> Tables.nation(spark, sfDir),
-      "events"   -> Tables.events(spark, sfDir))
-    raw.foreach { case (n, df) => Bronze.writeJdbc(df, url, s"bronze_$n") }
-    def zone(z: String, n: String): DataFrame =
+    RawTables.foreach(t =>
+      Bronze.writeJdbc(parquetRaw(spark, sfDir)(t), url, s"bronze_$t"))
+    def bronze(t: String): DataFrame =
       spark.read.format("jdbc").option("url", url)
-        .option("dbtable", s"${z}_$n").load()
-    val silver: Seq[(String, DataFrame)] = Seq(
-      "orders"   -> Silver.ordersStage(zone("bronze", "orders")),
-      "customer" -> Silver.customerStage(zone("bronze", "customer")),
-      "lineitem" -> Silver.lineitemStage(zone("bronze", "lineitem")),
-      "part"     -> Silver.partStage(zone("bronze", "part"),
-        zone("bronze", "nation")),
-      "supplier" -> Silver.supplierStage(zone("bronze", "supplier")),
-      "events"   -> Silver.eventsStage(zone("bronze", "events")))
-    silver.foreach { case (n, df) => Bronze.writeJdbc(df, url, s"silver_$n") }
-    val gold: Seq[(String, DataFrame)] = Seq(
-      "daily_sales" -> Gold.dailySalesStage(
-        zone("bronze", "lineitem"), zone("bronze", "orders")),
-      "customer_metrics" -> Gold.customerMetricsStage(
-        zone("bronze", "lineitem"), zone("bronze", "orders"),
-        zone("bronze", "customer")),
-      "product_performance" -> Gold.productPerformanceStage(
-        zone("bronze", "lineitem"), zone("bronze", "part")),
-      "seller_performance" -> Gold.sellerPerformanceStage(
-        zone("bronze", "lineitem"), zone("bronze", "supplier"),
-        zone("bronze", "orders")),
-      "satisfaction_metrics" -> Gold.satisfactionMetricsStage(
-        zone("bronze", "events")),
-      "delivery_performance" -> Gold.deliveryPerformanceStage(
-        zone("bronze", "lineitem"), zone("bronze", "orders")))
-    gold.foreach { case (n, df) => Bronze.writeJdbc(df, url, s"gold_$n") }
-    gold.map { case (n, _) => s"gold_$n" }
+        .option("dbtable", s"bronze_$t").load()
+    silverStages(bronze).foreach { case (t, df) =>
+      Bronze.writeJdbc(df, url, s"silver_$t") }
+    val gold = goldStages(bronze)
+    gold.foreach { case (t, df) => Bronze.writeJdbc(df, url, s"gold_$t") }
+    gold.map { case (t, _) => s"gold_$t" }
   }
 }

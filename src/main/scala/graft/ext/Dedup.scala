@@ -1296,8 +1296,13 @@ object Dedup {
     * minima in one pass — no explode, no md5-per-exploded-row, no
     * groupBy exchange of the corpus shingle stream per consumer.
     * Signatures are bit-identical (kernel scaladoc; DedupSpec pins the
-    * identity against the aggregated form). Docs with no shingle are
-    * dropped, matching the aggregated form (no rows → no group).
+    * identity against the aggregated form).
+    *
+    * Precondition: every `sh_arr` is non-empty. The kernel maps an empty
+    * array to an all-`Long.MaxValue` sentinel signature, where the
+    * aggregated form emits no row for a doc without shingles. Every
+    * caller passes [[shingleStrArrays]] output, which keeps only docs
+    * with at least 3 tokens, so each has at least one shingle.
     */
   def minhashSignaturesPortableNarrow(arrs: DataFrame): DataFrame =
     arrs

@@ -1274,7 +1274,7 @@ object Graph {
     * maximal-count rows — identical tie semantics to the Spark side's
     * `max(struct(count, −label))`. All-integer, so bit-exact.
     */
-  private def duckLpaCtes(rounds: Int = LpaRounds): String = {
+  private def duckLpaCtes(rounds: Int): String = {
     val steps = (1 to rounds).map { r =>
       s"""m$r AS MATERIALIZED (
          |  SELECT e.dst AS node, l.label, count(*) AS c

@@ -111,56 +111,6 @@ object Retail {
       .limit(k)
   }
 
-  /** User-user collaborative-filtering neighbors by co-purchase Jaccard —
-    * the "customers like you" complement to [[basketLift]]'s item-item
-    * lift. Each customer's item set is their distinct purchased parts;
-    * for every customer pair sharing ≥ `minShared` parts, Jaccard =
-    * |A∩B| / (|A|+|B|−|A∩B|) over the df-capped item space, and each
-    * customer keeps their top-`k` neighbors.
-    *
-    * Candidate pairs come from POSTING LISTS keyed by item (the same
-    * no-all-pairs shape as [[graft.ext.Dedup]]'s n-gram candidates):
-    * only customers sharing a concrete item ever meet, and items with
-    * document frequency > `maxDf` are dropped BEFORE pairing — the skew
-    * guard that bounds any single item's pair fan-out to df²/2 and
-    * keeps the hottest SKU from becoming a quadratic reducer at 100 TB.
-    * Set sizes are computed on the SAME capped space, so shared/union
-    * stay coherent. Top-k is a per-customer `row_number` on
-    * (jaccard desc, neighbor asc) — exact integers + one IEEE division,
-    * so the order is engine-identical.
-    */
-  def copurchaseNeighbors(li: DataFrame, ord: DataFrame, maxDf: Int = 200,
-      minShared: Int = 2, k: Int = 5): DataFrame = {
-    val ui = li.select(col("l_orderkey"), col("l_partkey"))
-      .join(ord.select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("u"), col("l_partkey").as("item"))
-      .distinct()
-    val df = ui.groupBy("item").agg(count(lit(1)).as("df"))
-    // materialized once: feeds sizes and both sides of the pair join
-    val kept = graft.CheckpointLease.track(
-      ui.join(df.filter(col("df") <= maxDf).select("item"), Seq("item"))
-        .localCheckpoint())
-    val sizes = kept.groupBy("u").agg(count(lit(1)).as("n_items"))
-    val pairs = kept.as("a").join(kept.as("b"),
-        col("a.item") === col("b.item") && col("a.u") < col("b.u"))
-      .groupBy(col("a.u").as("u"), col("b.u").as("v"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-    val sym = pairs.unionByName(
-      pairs.select(col("v").as("u"), col("u").as("v"), col("shared")))
-    val w = Window.partitionBy("u").orderBy(col("jaccard").desc, col("v"))
-    sym
-      .join(sizes.select(col("u"), col("n_items").as("n_u")), Seq("u"))
-      .join(sizes.select(col("u").as("v"), col("n_items").as("n_v")),
-        Seq("v"))
-      .withColumn("jaccard", col("shared").cast("double") /
-        (col("n_u") + col("n_v") - col("shared")))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("u", "v", "shared", "n_u", "n_v", "jaccard", "rnk")
-  }
-
   /** RFM customer segmentation — recency / frequency / monetary quartile
     * scores, the standard commerce segmentation model. Each dimension is
     * scored 1–4 against its own quartile boundaries; boundaries follow

@@ -221,15 +221,17 @@ object Similarity {
 
   /** Trained IVF codebook: `iters` Lloyd iterations of k-means under the
     * cosine metric. Init is deterministic (the first `k` vectors); each
-    * iteration broadcasts the k×dim codebook, assigns every vector to its
-    * best centroid with ONE `max_by` hash-agg (no window sort), and
+    * iteration assigns every vector to its best centroid in a narrow
+    * per-row pick over the driver-side codebook (the compiled
+    * [[graft.functions.CentroidRank]] kernel, no exchange), and
     * recomputes per-dimension means with one explode+agg — the k×dim mean
     * table (≤ a few KB) is collected to the driver to become the next
-    * broadcast codebook. Cost per iteration is two shuffles of O(n) rows;
-    * empty clusters keep their previous centroid. This replaces the
-    * round-2 "first 16 vectors" stand-in, whose recall silently degrades
-    * on clustered corpora (centroids all land in whichever clusters the
-    * low ids happen to occupy).
+    * codebook. Cost per iteration is one corpus scan and one
+    * partial-merging aggregate; empty clusters keep their previous
+    * centroid, and an empty corpus yields an empty codebook. This
+    * replaces the round-2 "first 16 vectors" stand-in, whose recall
+    * silently degrades on clustered corpora (centroids all land in
+    * whichever clusters the low ids happen to occupy).
     *
     * == Centroid determinism ==
     * The Lloyd mean update runs on int64 MICRO-UNIT sums
@@ -243,38 +245,7 @@ object Similarity {
     * noise floor (recall gates in SimilaritySpec are unchanged).
     */
   def trainCentroids(emb: DataFrame, k: Int = Centroids,
-      iters: Int = KmeansIters): DataFrame =
-    // r20: cosine assignment via the compiled CentroidRank kernel —
-    // the HOF fold evaluated interpreted per row (see kernel scaladoc;
-    // same pick bit-for-bit)
-    lloydTrain(emb, k, iters, prev => element_at(
-      graft.functions.PqAssign.centroidRank(col("embedding"), prev), 1))
-
-  /** Squared L2 distance via three sequential-fold dots (the metric PQ
-    * subquantizers train under — cosine is wrong on subvector slices,
-    * whose norms carry signal).
-    */
-  def l2sq(a: Column, b: Column): Column =
-    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
-
-  /** [[trainCentroids]] with a pluggable assignment score (higher =
-    * closer); pass `(a, b) => -l2sq(a, b)` for Euclidean Lloyd steps.
-    */
-  def trainCentroidsWith(emb: DataFrame, k: Int, iters: Int,
-      score: (Column, Column) => Column): DataFrame =
-    lloydTrain(emb, k, iters, prev =>
-      bestOfCandidates(candidatesCol(prev, col("embedding"), score)))
-
-  /** The shared Lloyd loop; `bestFor` maps the driver-side codebook to
-    * the per-row best-centroid struct column. [[trainCentroids]] plugs
-    * the compiled [[graft.functions.CentroidRank]] kernel (r20 — the
-    * r19 HOF fold evaluated interpreted per row); [[trainCentroidsWith]]
-    * keeps the generic HOF form for pluggable metrics. An empty corpus
-    * now yields an empty codebook instead of throwing in
-    * `candidatesCol` (r19 advice).
-    */
-  private def lloydTrain(emb: DataFrame, k: Int, iters: Int,
-      bestFor: Seq[(Int, Seq[Float])] => Column): DataFrame = {
+      iters: Int = KmeansIters): DataFrame = {
     val spark = emb.sparkSession
     val vecs = emb.select(col("vec_id"), col("embedding")).persist()
     // Deterministic init from the first k rows IN vec_id ORDER, re-keyed
@@ -293,10 +264,13 @@ object Similarity {
       // paid a k-fold row explosion plus a full corpus shuffle PER
       // LLOYD ITERATION; the argmax is the same pick (strict `>` over
       // cid-ascending candidates = max_by's (ccos, -cid) tie-break,
-      // same NaN-largest total order) with zero exchanges (guide §2.4)
-      val bestCol = bestFor(prev.toSeq)
+      // same NaN-largest total order) with zero exchanges (guide §2.4).
+      // r20: the pick runs in the compiled CentroidRank kernel, whose
+      // head is that argmax bit-for-bit (see the kernel scaladoc).
       val best = vecs
-        .select(bestCol.getField("centroid_id").as("centroid_id"),
+        .select(element_at(graft.functions.PqAssign.centroidRank(
+            col("embedding"), prev.toSeq), 1)
+          .getField("centroid_id").as("centroid_id"),
           col("embedding"))
       val means = best
         .select(col("centroid_id"),
@@ -319,23 +293,12 @@ object Similarity {
     cents
   }
 
-  /** Per-row candidate array `[(ccos, centroid_id), ...]` over a
-    * driver-side codebook, in cid-ascending order — the r19 narrow
-    * assignment core. One score subtree per centroid (LINEAR plan
-    * size; a when-chain fold would duplicate the accumulator per step
-    * and blow the tree up exponentially). Each candidate's score is
-    * the identical [[cosine]]/`score` expression over the identical
-    * float values (literal array = the codebook row), so scores are
-    * bit-identical to the old crossJoin form.
+  /** Squared L2 distance via three sequential-fold dots (the metric PQ
+    * subquantizers train under — cosine is wrong on subvector slices,
+    * whose norms carry signal).
     */
-  private def candidatesCol(cb: Seq[(Int, Seq[Float])], vec: Column,
-      score: (Column, Column) => Column): Column = {
-    require(cb.nonEmpty, "empty codebook")
-    array(cb.sortBy(_._1).map { case (cid, v) =>
-      struct(score(vec, typedLit(v)).as("ccos"),
-        lit(cid).as("centroid_id"))
-    }: _*)
-  }
+  def l2sq(a: Column, b: Column): Column =
+    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
 
   private def collectCodebook(cents: DataFrame): Seq[(Int, Seq[Float])] =
     cents.select(col("centroid_id"), col("c"))
@@ -344,24 +307,11 @@ object Similarity {
         r.getSeq[Float](1)))
       .toSeq
 
-  /** Best-centroid struct `(ccos, centroid_id)` as a NARROW per-row
-    * `aggregate` over [[candidatesCol]] — exactly the old window's
-    * `row_number() over (order by ccos desc, centroid_id) = 1` pick:
-    * Spark's `>` is the same NaN-largest total order the sort used,
-    * and on ties the earlier (smaller) cid survives the strict
-    * comparison. The lambda references its accumulator as a variable,
-    * so the plan stays linear in k.
-    */
-  private def bestOfCandidates(cands: Column): Column =
-    aggregate(cands, element_at(cands, 1),
-      (acc, x) => when(x.getField("ccos") > acc.getField("ccos"), x)
-        .otherwise(acc))
-
-
   /** The codebook ranked per row by `(ccos desc, centroid_id asc)` as a
-    * NARROW array projection — the top-N companion of
-    * [[bestCentroidCol]] for probe selection. `array_sort`'s comparator
-    * uses the same `>` total order (NaN largest) the old
+    * NARROW array projection — the top-N companion of the best-centroid
+    * pick in [[ivfAssignmentsWithCos]], for probe selection.
+    * `array_sort`'s comparator uses the same `>` total order (NaN
+    * largest) the old
     * `row_number()` window sorted by, and centroid ids are distinct, so
     * `slice(..., 1, p)` is exactly the window's `crank <= p` cut — with
     * no k-fold row explosion, no exchange, and no sort of the query
@@ -372,10 +322,10 @@ object Similarity {
 
   /** [[rankedCentroidsCol]] over an already-collected codebook — r20:
     * the compiled [[graft.functions.CentroidRank]] kernel replaces the
-    * r19 `array_sort(candidatesCol(...))`, whose HOF comparator AND k
-    * cosine candidate subtrees evaluated interpreted per row (the
-    * dominant cost of every IVF serve/eval path after the r19
-    * de-crossJoin). Same scores, same (ccos desc, centroid_id) order —
+    * r19 `array_sort` over per-centroid candidate structs, whose HOF
+    * comparator AND k cosine candidate subtrees evaluated interpreted
+    * per row (the dominant cost of every IVF serve/eval path after the
+    * r19 de-crossJoin). Same scores, same (ccos desc, centroid_id) order —
     * see the kernel's bit-identity scaladoc. An empty codebook ranks to
     * an empty array (old crossJoin-with-empty semantics, r19 advice).
     */
@@ -398,14 +348,14 @@ object Similarity {
     * vec_id — a k-fold row explosion followed by a FULL SHUFFLE + SORT
     * of the corpus, per assignment consumer. Assignment is per-row
     * work against a bounded codebook, so it now runs as a narrow
-    * projection ([[bestCentroidCol]]): no exchange, no sort, no row
+    * projection (the CentroidRank kernel): no exchange, no sort, no row
     * explosion — at 100 TB this deletes one corpus shuffle per Lloyd
     * iteration / serve / eval path. Output rows and scores are
     * bit-identical (same cosine expression, same tie-break; the whole
     * sim/vec oracle family re-verified after).
     */
   def ivfAssignmentsWithCos(emb: DataFrame, cents: DataFrame): DataFrame = {
-    // r20: the compiled CentroidRank kernel's head IS bestOfCandidates'
+    // r20: the compiled CentroidRank kernel's head IS the best-centroid
     // pick (same strict-> total order, earlier cid on ties); an empty
     // codebook short-circuits to an empty result — the pre-r19
     // crossJoin-with-empty semantics, without the plan-build throw

@@ -143,10 +143,10 @@ case class PqNearestCentroids(child: Expression, books: Array[Float],
 
 /** Coarse-quantizer ranking kernel: the full codebook ranked per row by
   * `(ccos desc, centroid_id asc)` — `array<struct<ccos:double,
-  * centroid_id:int>>`, the compiled form of r19's
-  * `array_sort(candidatesCol(...))` ([[graft.ext.Similarity]]
-  * `rankedCentroidsCol`) and, via `element_at(_, 1)`, of
-  * `bestOfCandidates`.
+  * centroid_id:int>>`, the compiled form of r19's `array_sort` over
+  * per-centroid candidate structs ([[graft.ext.Similarity]]
+  * `rankedCentroidsCol`) and, via `element_at(_, 1)`, of its
+  * `aggregate` argmax.
   *
   * == Why (r20) ==
   * `aggregate`/`array_sort` are higher-order functions: Catalyst

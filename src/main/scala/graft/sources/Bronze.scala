@@ -95,16 +95,6 @@ object Bronze {
       .option("mode", "FAILFAST")
       .csv(path)
 
-  /** S1 (reference-parity variant): header + schema inference, as the
-    * reference does it — kept for ingest of unknown CSVs; prefer
-    * [[readCsv]].
-    */
-  def readCsvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(path)
-
   /** S3: Parquet sink, full-refresh overwrite (the reference's
     * `mode("overwrite")` JDBC write re-expressed). `partitionCols` adds
     * directory partitioning for pruning; leave empty for small dims.

@@ -84,17 +84,6 @@ object EventsStreaming {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.readStream.schema(schema).parquet(dir)
 
-  /** Streaming twin of [[sessionsBatch]] with a 10-minute watermark. */
-  def sessionsStream(ev: DataFrame): DataFrame =
-    ev.withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"), centsSum("value").as("value_cents"))
-      .select(
-        col("user_id"),
-        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        col("n_events"), col("value_cents"))
-
   /** Streaming exact dedup by event_id: duplicates arriving within the
     * watermark horizon are dropped, and state for an id is reclaimed once
     * the watermark passes it — bounded state, unlike a plain streaming

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.etl.{Gold, Silver}
+import graft.etl.Silver
 import graft.sources.{Bronze, Scratch}
 
 /** Incremental medallion: the batch bronze→silver→gold pipeline

@@ -20,6 +20,22 @@ class PipelineSpec extends SparkSpec {
     assert(checks.count(_.check.startsWith("pk_unique")) === 5)
   }
 
+  test("full run throws when a check fails: an empty raw table fails its " +
+      "non_empty check instead of passing silently") {
+    val sf = java.nio.file.Paths.get("/root/testdata/sf0.001")
+    val in = Files.createTempDirectory("graft_pipe_empty_in")
+    Files.list(sf).forEach(f =>
+      if (f.getFileName.toString != "supplier.parquet")
+        Files.copy(f, in.resolve(f.getFileName)))
+    spark.read.parquet(sf.resolve("supplier.parquet").toString).limit(0)
+      .write.parquet(in.resolve("supplier.parquet").toString)
+    val out = Files.createTempDirectory("graft_pipe_empty_out").toString
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.runAll(spark, in.toString, out)
+    }
+    assert(e.getMessage.contains("supplier/non_empty"), e.getMessage)
+  }
+
   test("reference-parity JDBC medallion: bronze->silver->gold entirely " +
       "through an embedded Derby store; gold equals the parquet-path gold") {
     val sf = "/root/testdata/sf0.001"

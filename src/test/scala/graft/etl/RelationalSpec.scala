@@ -355,7 +355,6 @@ class RelationalSpec extends SparkSpec {
 
   test("hllSketchMerge: per-group estimates within 5% of exact; merged " +
       "union matches a direct whole-table sketch") {
-    import org.apache.spark.sql.functions._
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
     val rows = Relational.hllSketchMerge(li).collect()
     val (groups, merged) = rows.partition(_.getString(0) != "ALL(merged)")
@@ -407,7 +406,7 @@ class RelationalSpec extends SparkSpec {
     // B: 1,3 (two-point symmetric): skew 0, excess kurtosis -2
     val df = Seq(("A", 1.0), ("A", 2.0), ("A", 3.0), ("B", 1.0), ("B", 3.0))
       .map { case (rf, q) => (1L, 1, q, rf) }
-      .zipWithIndex.map { case ((ok, ln, q, rf), i) => (ok, i, q, rf) }
+      .zipWithIndex.map { case ((ok, _, q, rf), i) => (ok, i, q, rf) }
       .toDF("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
     val r = Relational.momentStats(df)
       .select("l_returnflag", "n_lines", "s1", "s4", "skewness",

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
 
 /** Edge-semantics fixtures per FIXTURES.md §C: duplicate rows (exact and
   * key-only), nulls in fill/drop columns, filter boundaries, unmatched

@@ -173,7 +173,6 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("chunkDocuments over testdata: every token position is covered") {
-    import spark.implicits._
     val bad = Corpus.chunkDocuments(docs)
       .groupBy("doc_id")
       .agg(max(col("start_tok") + col("chunk_len") - 1).as("covered"),
@@ -186,7 +185,6 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("shardAssign: a permutation — every doc once, dense positions") {
-    import spark.implicits._
     val out = Corpus.shardAssign(docs)
     assert(out.count() === docs.count())
     assert(out.select("doc_id").distinct().count() === docs.count())

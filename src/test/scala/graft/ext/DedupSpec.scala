@@ -245,6 +245,16 @@ class DedupSpec extends SparkSpec {
     // the symmetric detector misses this pair at its default threshold
     assert(p.getAs[Double]("jaccard") < 0.5)
     assert(Dedup.ngramJaccardPairs(d).collect().isEmpty)
+    // threshold 0 reports every pair that shares a shingle, with its
+    // exact containment: doc 4's 4 shingles share only "alpha beta gamma"
+    // with docs 1 and 2; doc 3 shares none, so it never pairs
+    val d4 = d.union(Seq((4L, "alpha beta gamma kappa lambda mu"))
+      .toDF("doc_id", "text"))
+    val all = Dedup.containmentDedupPairs(d4, threshold = 0.0).collect()
+      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+        r.getAs[Double]("containment")))
+      .sortBy(r => (r._1, r._2)).toSeq
+    assert(all === Seq((1L, 2L, 1.0), (1L, 4L, 0.25), (2L, 4L, 0.25)))
   }
 
   test("minhashIncremental: batch probes index, lower batch id wins, unique kept") {

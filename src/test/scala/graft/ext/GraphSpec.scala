@@ -77,6 +77,18 @@ class GraphSpec extends SparkSpec {
     assert(a.filter(_._3 == 1L).map(_._1).toSeq === Seq(1L, 3L))
     assert(a.filter(x => x._1 >= 5L).forall(_._2 === 0L),
       "isolated component must keep zero rank")
+    // one iteration, hand-replayed: seeds 1 and 3 start at Scale/2 and
+    // send (Scale/2) div 3 along each edge; a seed gets the teleport
+    // Scale·15/200 plus 85 % of the other seed's share, nodes 2 and 4
+    // 85 % of both seeds' shares
+    val one = Graph.personalizedPagerank(edges, iterations = 1, seedCount = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    graft.CheckpointLease.releaseAll()
+    val c = Graph.Scale / 2 / 3
+    val seed = Graph.Scale * 15L / 200L + 85L * c / 100
+    val mid = 85L * (2 * c) / 100
+    assert(one.toSeq === Seq((1L, seed, 1L), (2L, mid, 0L), (3L, seed, 1L),
+      (4L, mid, 0L), (5L, 0L, 0L), (6L, 0L, 0L)))
   }
 
   test("triangleCount: counts each triangle once, orientation-independent") {
@@ -345,6 +357,17 @@ class GraphSpec extends SparkSpec {
     val qParity = Graph.modularityOfLabels(edges, parity)
       .collect().map(_.getAs[Double]("q_contrib")).sum
     assert(qLpa > 0 && qParity < 0 && qLpa > qParity)
+    // one round (ties to the smallest label): 1 -> 2, 2 -> 1, 3 -> 1,
+    // 10 -> 3, 11 -> 10, 12 -> 10 — the communities are not found yet
+    val one = Graph.lpaModularity(edges, rounds = 1).collect()
+    assert(one.map(r => r.getAs[Long]("cluster_id") ->
+        ((r.getAs[Long]("n_nodes"), r.getAs[Long]("e_in"),
+          r.getAs[Long]("d_sum"), r.getAs[Double]("q_contrib")))).toMap ===
+      Map(1L -> ((2L, 2L, 5L, 2.0 / 14 - (5.0 / 14) * (5.0 / 14))),
+        2L -> ((1L, 0L, 2L, 0.0 - (2.0 / 14) * (2.0 / 14))),
+        3L -> ((1L, 0L, 3L, 0.0 - (3.0 / 14) * (3.0 / 14))),
+        10L -> ((2L, 2L, 4L, 2.0 / 14 - (4.0 / 14) * (4.0 / 14)))))
+    assert(one.map(_.getAs[Double]("q_contrib")).sum < qLpa)
     // a community with zero intra edges keeps its row (left join)
     val lone = edges.select(col("src").as("node")).distinct()
       .withColumn("cluster_id",

@@ -108,14 +108,16 @@ class HeavyHittersSpec extends SparkSpec {
 
   test("frequentTokens over testdata matches brute force") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val got = HeavyHitters.frequentTokens(docs, 0.002)
-      .select("token", "cnt").as[(String, Long)].collect().toSet
     val tok = docs.select(explode(split(col("text"), " ")).as("token"))
     val total = tok.count()
-    val want = tok.groupBy("token").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= math.ceil(0.002 * total))
-      .as[(String, Long)].collect().toSet
-    assert(got === want)
-    assert(got.nonEmpty)
+    Seq(0.002, 0.01).foreach { minFrac =>
+      val got = HeavyHitters.frequentTokens(docs, minFrac)
+        .select("token", "cnt").as[(String, Long)].collect().toSet
+      val want = tok.groupBy("token").agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") >= math.ceil(minFrac * total))
+        .as[(String, Long)].collect().toSet
+      assert(got === want, s"minFrac $minFrac")
+      assert(got.nonEmpty, s"minFrac $minFrac")
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class PrivacySpec extends SparkSpec {
   import spark.implicits._
