@@ -1,4 +1,8 @@
 package graft
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
@@ -33,18 +37,39 @@ object Bench {
     }
   }
 
-  /** One SparkSession shape shared by the sweep JVM and the fresh-retry
-    * JVM (graft.BenchOne) so a fresh-JVM number is comparable by
-    * construction — same master, same shuffle partitions, no UI.
+  /** Core count of every main's session: `SPARK_GRAFT_CPUS`, default 4,
+    * parsed to Int up front — the value is interpolated unquoted into the
+    * bench's JSON result line, so a non-numeric setting (e.g. "*") must
+    * fail fast here rather than emit an unparseable artifact at the end of
+    * a sweep.
     */
-  def buildSession(cpus: Int): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.ui.enabled", "false")
-    // consume() hashes struct(*); a map-typed output column would
-    // otherwise throw at analysis (hash-on-map is banned by default)
-    .config("spark.sql.legacy.allowHashOnMapType", "true")
-    .getOrCreate()
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** Dev-only subset filter shared by Bench and Verify: the
+    * comma-separated query names in `SPARK_GRAFT_ONLY`, when set. The
+    * driver never sets it.
+    */
+  def onlyQueries: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+
+  /** The one SparkSession shape of every main (Bench, TimeQuery, Verify,
+    * Explain, PlanDump), so a fresh-JVM TimeQuery number is comparable to
+    * the sweep by construction — same master, shuffle partitions, session
+    * timezone (UTC whether or not the JVM was started by sbt), no UI.
+    */
+  def buildSession(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // consume() hashes struct(*); a map-typed output column would
+      // otherwise throw at analysis (hash-on-map is banned by default)
+      .config("spark.sql.legacy.allowHashOnMapType", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Session hygiene between queries: release leased checkpoints and any
     * cached plans so one query's storage can never be charged to another
@@ -57,17 +82,53 @@ object Bench {
     org.apache.spark.sql.GraftBridge.sessionHygiene(spark)
   }
 
-  /** Fresh-JVM re-measure tier (r17 verdict #1). A same-JVM "isolated"
-    * retry still shares the sweep's heap residue, fragmented code cache
-    * and GC history — r17 recorded graph_wcc at 11.4 s same-JVM-isolated
-    * vs 3.2-4.6 s fresh-JVM, and the adjudication lived in BENCHNOTES
-    * prose instead of the artifact. This spawns `java -cp
-    * <classes>:<spark jars> graft.BenchOne <name>` (same session shape,
-    * one unmeasured warmup + one timed pass) and parses its one-line
-    * result, so a pressure episode is adjudicated INSIDE the JSON.
-    * Best-effort: missing classes dir, spawn failure, timeout or an
-    * unparseable line all yield None rather than poisoning the sweep.
+  /** The one timing loop: `warmups` unmeasured passes, then `reps` timed
+    * passes of build + [[consume]], with a [[reset]] after every pass
+    * (outside the timed window). Returns the timed passes' seconds.
+    *
+    * A query that THROWS must not report its time-to-throw as if it were
+    * a result (that would let a query broken only at bench SF post a fast
+    * "number"): a pass failing with a non-fatal error records the -1.0
+    * sentinel. Fatal errors (an OOM, a dying JVM) propagate and abort the
+    * run instead of being recorded as a query failure.
     */
+  def time(spark: SparkSession, sfDir: String,
+      q: (SparkSession, String) => DataFrame,
+      warmups: Int, reps: Int): Seq[Double] = {
+    def pass(): Double = {
+      val t0 = System.nanoTime()
+      val ok =
+        try { consume(q(spark, sfDir)); true }
+        catch { case NonFatal(_) => false }
+      val dt = (System.nanoTime() - t0) / 1e9
+      reset(spark)
+      if (ok) dt else -1.0
+    }
+    (1 to warmups).foreach(_ => pass())
+    Seq.fill(reps)(pass())
+  }
+
+  /** Millisecond precision keeps the bench's single JSON line short enough
+    * for the driver's fixed-size stdout tail capture (full-precision
+    * doubles alone pushed even a truncated line past the buffer in rounds
+    * 1-3).
+    */
+  private def f3(v: Double): String =
+    "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** TimeQuery's per-query result line, `TIME <name>: <sec>, ... s`
+    * (-1.000 for a failed pass); [[freshJvmRetry]] parses it back with
+    * [[parseTimeLine]].
+    */
+  def timeLine(name: String, times: Seq[Double]): String =
+    s"TIME $name: ${times.map(f3).mkString(", ")} s"
+
+  /** The first pass of `name`'s [[timeLine]] in `out`; None when the line
+    * is missing or the pass failed. */
+  def parseTimeLine(name: String, out: String): Option[Double] =
+    s"TIME ${scala.util.matching.Regex.quote(name)}: ([-0-9.]+)".r
+      .findFirstMatchIn(out).map(_.group(1).toDouble).filter(_ >= 0)
+
   /** Warmup passes the fresh-JVM tier runs before its timed pass. One
     * pass absorbs codegen compile + file-index caches but NOT cold code
     * cache for iterative queries (r18 measured graph_clustering at
@@ -79,8 +140,20 @@ object Bench {
     */
   val FreshJvmWarmups = 3
 
-  def freshJvmRetry(name: String, sfDir: String, cpus: Int,
-      timeoutSec: Long = 600, warmups: Int = FreshJvmWarmups): Option[Double] =
+  /** Fresh-JVM re-measure tier (r17 verdict #1). A same-JVM "isolated"
+    * retry still shares the sweep's heap residue, fragmented code cache
+    * and GC history — r17 recorded graph_wcc at 11.4 s same-JVM-isolated
+    * vs 3.2-4.6 s fresh-JVM, and the adjudication lived in BENCHNOTES
+    * prose instead of the artifact. This spawns `java -cp
+    * <classes>:<spark jars> graft.TimeQuery <sfDir> 1 <name>` (same
+    * session shape, [[FreshJvmWarmups]] unmeasured warmups + one timed
+    * pass) and parses its TIME line, so a pressure episode is adjudicated
+    * INSIDE the JSON. Best-effort: missing classes dir, spawn failure,
+    * timeout or an unparseable line all yield None rather than poisoning
+    * the sweep.
+    */
+  def freshJvmRetry(name: String, sfDir: String,
+      timeoutSec: Long = 600): Option[Double] =
     try {
       val classes = sys.env.get("SPARK_GRAFT_CLASSES_DIR")
         .getOrElse("target/scala-2.13/classes")
@@ -90,10 +163,8 @@ object Bench {
         .defaultModuleOptions().split("\\s+").filter(_.nonEmpty).toSeq
       val cmd = (javaBin +: moduleOpts) ++
         Seq("-Xmx24g", "-cp", s"$classes:/opt/spark/jars/*",
-          "graft.BenchOne", name, warmups.toString)
+          "graft.TimeQuery", sfDir, "1", name)
       val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.redirectError(ProcessBuilder.Redirect.DISCARD)
       val p = pb.start()
       // drain stdout on a daemon thread: readAllBytes inline would block
@@ -102,17 +173,15 @@ object Bench {
       val outBuf = new java.io.ByteArrayOutputStream()
       val drainer = new Thread(() =>
         try p.getInputStream.transferTo(outBuf)
-        catch { case _: Throwable => () })
+        catch { case NonFatal(_) => () })
       drainer.setDaemon(true)
       drainer.start()
       if (!p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)) {
         p.destroyForcibly(); return None
       }
       drainer.join(5000)
-      val out = new String(outBuf.toByteArray, "UTF-8")
-      s"BENCH_ONE $name ([-0-9.]+)".r.findFirstMatchIn(out)
-        .map(_.group(1).toDouble).filter(_ >= 0)
-    } catch { case scala.util.control.NonFatal(_) => None }
+      parseTimeLine(name, new String(outBuf.toByteArray, "UTF-8"))
+    } catch { case NonFatal(_) => None }
 
   /** Headline queries: one representative per expensive operator family
     * (scan+agg, join chain, window, cleansing, skew/as-of/range join,
@@ -142,92 +211,46 @@ object Bench {
     * (`sfDir`): comparing an sf0.001 smoke against sf0.1 numbers would
     * flag nonsense in both directions. Missing file, malformed
     * content, SF mismatch, or an unknown query all degrade to
-    * "no guard" rather than failing the bench.
+    * "no guard" rather than failing the bench. A nested value inside
+    * `queries_sec` disables the guard outright (Map.empty) rather than
+    * returning a map whose provenance is ambiguous (r13 advice); other
+    * non-numeric or negative values are skipped.
     */
   def benchFullBaseline(sfDir: String,
       path: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE",
         "BENCH_FULL.json")): Map[String, Double] =
     try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      val sfOk = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r
-        .findFirstMatchIn(txt).exists(_.group(1) == sfDir)
-      val idx = txt.indexOf("\"queries_sec\"")
-      if (!sfOk || idx < 0) Map.empty
-      else {
-        // parse ONLY the queries_sec object, delimited by BRACE DEPTH
-        // (not the first '}'). A nested object inside queries_sec would
-        // previously still be regex-harvested and — toMap being
-        // last-wins — could silently OVERRIDE a real query's baseline
-        // with an inner number (r13 advice): any nesting now disables
-        // the guard outright (Map.empty) rather than returning a map
-        // whose provenance is ambiguous. String values containing
-        // braces would still confuse this scan — the artifact is
-        // machine-written with no such values, and BenchSpec pins the
-        // committed file parsing end-to-end.
-        val open = txt.indexOf('{', idx)
-        var depth = 0
-        var i = open
-        var close = -1
-        var nested = false
-        while (open >= 0 && i < txt.length && close < 0) {
-          txt.charAt(i) match {
-            case '{' => depth += 1; if (depth > 1) nested = true
-            case '}' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (open < 0 || close < 0 || nested) Map.empty
-        else "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9][0-9.]*)".r
-          .findAllMatchIn(txt.substring(open, close))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+      val root = new ObjectMapper().readTree(new java.io.File(path))
+      val qs = root.path("queries_sec")
+      val fields = qs.properties().asScala.map(e => e.getKey -> e.getValue)
+      if (root.path("sf").asText() != sfDir || !qs.isObject ||
+          fields.exists(_._2.isContainerNode)) Map.empty
+      else fields.collect {
+        case (k, v) if v.isNumber && v.asDouble >= 0 => k -> v.asDouble
+      }.toMap
+    } catch { case NonFatal(_) => Map.empty }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed to Int up front: the value is interpolated unquoted into the
-    // JSON result line, so a non-numeric setting (e.g. "*") must fail fast
-    // here rather than emit an unparseable artifact at the end of a sweep
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = buildSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    def reset(): Unit = Bench.reset(spark)
+    val spark = buildSession()
     val all = SparkEntry.queries
-    // dev-only subset filter (comma-separated names) for isolated
-    // re-measures; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val picked =
-      if (only.isDefined) all.keys.toSeq.sorted.filter(only.get.contains)
-      else if (sys.env.contains("SPARK_GRAFT_BENCH_ALL"))
+    val picked = onlyQueries match {
+      case Some(only) => all.keys.toSeq.sorted.filter(only.contains)
+      case None if sys.env.contains("SPARK_GRAFT_BENCH_ALL") =>
         all.keys.toSeq.sorted
-      else Headline.filter(all.contains)
+      case None => Headline.filter(all.contains)
+    }
+    def timed(name: String, warmups: Int, reps: Int): Seq[Double] =
+      time(spark, sfDir, all(name), warmups, reps)
     // unmeasured warmup pass: JIT + codegen compile + file-index caches,
     // so the timed pass reports steady-state throughput (first-run JIT
     // noise otherwise dominates individual query numbers by 2-4x)
-    picked.foreach { name =>
-      try { consume(all(name)(spark, sfDir)) } catch { case _: Throwable => () }
-      reset()
-    }
+    picked.foreach(timed(_, 1, 0))
     // best-of-2 timed passes: this box shows intermittent 2-10x outliers
     // on single runs (stray GC/RPC stalls landing inside one query's
     // window); the min of two steady-state passes is the reproducible
-    // throughput number
-    // A query that THROWS must not report its time-to-throw as if it were
-    // a result (that would let a query broken only at bench SF post a fast
-    // "number"): failures record the -1.0 sentinel, and min() propagates
-    // it so the poisoned entry is visible in the JSON.
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { consume(all(name)(spark, sfDir)); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      reset()
-      if (ok) dt else -1.0
-    }
+    // throughput number. A failed pass's -1.0 sentinel propagates through
+    // min() so the poisoned entry is visible in the JSON.
     // self-defense against box-noise episodes (r11 post-mortem: a
     // contended box recorded 2x numbers for sql_recursive and
     // silver_lineitem into the permanent record even though the plans
@@ -238,11 +261,11 @@ object Bench {
     // knows the number is suspect, not a regression claim
     val baseline = benchFullBaseline(sfDir)
     val results = picked.map { name =>
-      val first = Seq(timed(name), timed(name))
+      val first = timed(name, 0, 2)
       val base = baseline.get(name)
       val suspect = base.exists(b =>
         first.forall(_ >= 0) && first.min > InflationFactor * b)
-      val passes = if (suspect) { System.gc(); first :+ timed(name) }
+      val passes = if (suspect) { System.gc(); first ++ timed(name, 0, 1) }
         else first
       // the -1 failure sentinel propagates from the TWO contract passes
       // (a query failing either is poisoned, as before) — but a guard
@@ -254,12 +277,9 @@ object Bench {
         best >= 0 && best > InflationFactor * b)
       (name, best, passes, inflated)
     }
-    // millisecond precision keeps the single JSON line short enough for the
-    // driver's fixed-size stdout tail capture (full-precision doubles alone
-    // pushed even a truncated line past the buffer in rounds 1-3)
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+    def secs(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => s"\"$k\":${f3(v)}" }.mkString("{", ",", "}")
+    val qs = secs(results.map(r => r._1 -> r._2))
     // all raw pass times (and the cpu count below) ride along so a
     // sweep-inflation episode is diagnosable from the artifact alone:
     // min >> isolated cost with p1 ≈ p2 means a slow/contended box, while
@@ -276,24 +296,13 @@ object Bench {
     // warmup + a timed pass) and the artifact carries BOTH numbers:
     // isolated ≈ baseline confirms box noise; isolated still high is a
     // real regression, now self-evident from the JSON alone.
-    val isolated = {
-      val flagged = results.collect { case (k, _, _, true) => k }
-      flagged.map { name =>
-        // GC per query (not once for the whole loop) so a later flagged
-        // entry isn't re-measured on the heap residue of an earlier one;
-        // the warmup catch is NonFatal only — an OOM/dying JVM must
-        // abort the bench rather than record a misleading retry number
-        // (r13 advice)
-        System.gc()
-        try { consume(all(name)(spark, sfDir)) }
-        catch { case scala.util.control.NonFatal(_) => () }
-        reset()
-        name -> timed(name)
-      }
+    val isolated = results.collect { case (k, _, _, true) =>
+      // GC per query (not once for the whole loop) so a later flagged
+      // entry isn't re-measured on the heap residue of an earlier one
+      System.gc()
+      k -> timed(k, 1, 1).head
     }
-    val isoJson = isolated
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+    val isoJson = secs(isolated)
     // fresh-JVM tier (r17 verdict #1): a same-JVM isolated retry that is
     // STILL above the guard is re-measured in a clean child JVM, so the
     // artifact itself distinguishes sweep-JVM pressure from a real
@@ -302,54 +311,15 @@ object Bench {
     val fresh = results.collect {
       case (k, _, _, true) if baseline.get(k).exists(b =>
           isoByName.get(k).forall(v => v < 0 || v > InflationFactor * b)) =>
-        k -> freshJvmRetry(k, sfDir, cpus)
+        k -> freshJvmRetry(k, sfDir)
     }.collect { case (k, Some(v)) => k -> v }
-    val freshJson = fresh
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+    val freshJson = secs(fresh)
     // total sums SUCCESSFUL queries only — summing -1 sentinels into the
     // total made r09's headline number uninterpretable; "failed" makes a
     // poisoned sweep explicit instead of quietly shrinking the total
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.count(_._2 < 0)
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failed,"cpus":$cpus,"inflated":$inflatedList,"isolated_retry_sec":$isoJson,"fresh_jvm_retry_sec":$freshJson,"fresh_jvm_warmups":$FreshJvmWarmups,"queries":$qs,"passes":$ps,"sf":"$sfDir"}""")
-    spark.stop()
-  }
-}
-
-/** One-query fresh-JVM measurer for [[Bench.freshJvmRetry]]: same session
-  * shape as the sweep (Bench.buildSession), `k` unmeasured warmup passes
-  * (args(1), default 1 — the retry tier passes
-  * [[Bench.FreshJvmWarmups]]), hygiene reset between passes, one timed
-  * pass with the prune-proof [[Bench.consume]] action, one
-  * machine-parseable line:
-  *   BENCH_ONE <name> <sec|-1.0>
-  * Runs via plain `java -cp` over the compiled classes dir plus the
-  * Spark jars dir, so the measurement starts from a cold heap/code cache
-  * — and with k≥3 warmups the timed pass is the pass-(k+1) steady state,
-  * not a cold-code-cache number (r18 magnitude caveat, retired).
-  */
-object BenchOne {
-  def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val warmups = args.lift(1).map(_.toInt).getOrElse(1).max(0)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Bench.buildSession(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    val q = SparkEntry.queries(name)
-    (1 to warmups).foreach { _ =>
-      try { Bench.consume(q(spark, sfDir)) }
-      catch { case scala.util.control.NonFatal(_) => () }
-      Bench.reset(spark)
-    }
-    val t0 = System.nanoTime()
-    val ok =
-      try { Bench.consume(q(spark, sfDir)); true }
-      catch { case _: Throwable => false }
-    val dt = (System.nanoTime() - t0) / 1e9
-    val sec = if (ok) "%.3f".formatLocal(java.util.Locale.ROOT, dt) else "-1.0"
-    println(s"BENCH_ONE $name $sec")
     spark.stop()
   }
 }

@@ -15,60 +15,30 @@ import org.apache.spark.sql.GraftBridge
   * accumulate and their memory/GC pressure gets charged to whichever query
   * shuffles hardest next (diagnosed in round 2 as a 7x phantom regression).
   *
-  * == Scoping ==
-  * Leases land in the SCOPE active when the builder ran. Sequential
-  * harnesses (Bench / Verify / TimeQuery) use the default scope and call
-  * [[releaseAll]] after each query's consuming action. A caller running
-  * queries CONCURRENTLY in one JVM wraps each build in
-  * [[scoped]]`("my-query") { ... }` and later calls [[release]]`("my-query")`
-  * after its own consuming action — other scopes' leases are untouched, so
-  * parallel queries can no longer release each other's blocks (round-3
-  * advice). The scope token rides a `DynamicVariable` (inheritable
-  * thread-local), so it survives the builder's internal calls without
-  * threading a parameter through every operator.
+  * == Contract ==
+  * One JVM-wide lease list, released by sequential harnesses: Bench,
+  * TimeQuery, Verify (through [[Bench.reset]]) and the benchmark call
+  * [[releaseAll]] after each query's consuming action, and run one query
+  * at a time. A caller that runs queries concurrently in one JVM must not
+  * call [[releaseAll]] while another query's tracked frame is still to be
+  * acted on: it releases every lease, not only its own.
   *
   * Releasing unpins the blocks of a lineage-truncated plan, so a tracked
-  * frame must not be acted on again after its scope is released —
-  * harnesses that re-run a query rebuild it from its `SparkEntry.queries`
-  * function, which re-checkpoints.
+  * frame must not be acted on again after it is released — harnesses
+  * that re-run a query rebuild it from its `SparkEntry.queries` function,
+  * which re-checkpoints.
   */
 object CheckpointLease {
 
-  /** Scope used when no [[scoped]] block is active. */
-  val DefaultScope = "default"
+  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  private val tracked =
-    scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.ArrayBuffer[DataFrame]]
+  /** Register a checkpointed frame; returns it. */
+  def track(df: DataFrame): DataFrame = synchronized { tracked += df; df }
 
-  private val currentScope =
-    new scala.util.DynamicVariable[String](DefaultScope)
-
-  /** Register a checkpointed frame in the active scope; returns it. */
-  def track(df: DataFrame): DataFrame = synchronized {
-    tracked.getOrElseUpdate(currentScope.value,
-      scala.collection.mutable.ArrayBuffer.empty) += df
-    df
-  }
-
-  /** Run `body` with leases landing in scope `name` (re-entrant; nested
-    * scopes shadow). */
-  def scoped[A](name: String)(body: => A): A =
-    currentScope.withValue(name)(body)
-
-  /** Release the blocks behind every frame tracked in scope `name`. */
-  def release(name: String): Unit = synchronized {
-    tracked.remove(name).foreach(_.foreach(GraftBridge.unpersistLocalCheckpoint))
-  }
-
-  /** Release every scope's tracked frames (idempotent; sequential-harness
-    * reset between queries). */
+  /** Release the blocks behind every tracked frame (idempotent;
+    * sequential-harness reset between queries). */
   def releaseAll(): Unit = synchronized {
-    tracked.valuesIterator.foreach(_.foreach(GraftBridge.unpersistLocalCheckpoint))
+    tracked.foreach(GraftBridge.unpersistLocalCheckpoint)
     tracked.clear()
   }
-
-  /** Number of currently-tracked leases across all scopes (spec
-    * observability). */
-  def size: Int = synchronized(tracked.valuesIterator.map(_.size).sum)
 }

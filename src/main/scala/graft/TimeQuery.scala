@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Single-query timing tool (dev loop for the bench): runs the named
-  * queries `reps` times after one warmup pass each, printing per-run
-  * seconds. Usage:
+/** Single-query timing tool (dev loop for the bench, and the child JVM of
+  * [[Bench.freshJvmRetry]]): runs each named query
+  * [[Bench.FreshJvmWarmups]] unmeasured passes, then `reps` timed passes,
+  * printing one [[Bench.timeLine]] per query (-1.000 for a failed pass).
+  * Usage:
   *   SPARK_GRAFT_CPUS=32 runMain graft.TimeQuery <sfDir> <reps> <name...>
   */
 object TimeQuery {
@@ -13,41 +13,16 @@ object TimeQuery {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val names = if (args.length > 2) args.drop(2).toSeq
                 else Seq("dedup_clusters")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev-only A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applied on top
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Bench.consume hashes struct(*) — same rationale as buildSession
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).filter(_.nonEmpty).map(_.split("=", 2))
-      .foreach {
-        case Array(k, v) => builder.config(k, v)
-        case Array(bad) => sys.error(
-          s"SPARK_GRAFT_EXTRA_CONF token '$bad' is not k=v")
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def reset(): Unit = {
-      CheckpointLease.releaseAll()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.GraftBridge.sessionHygiene(spark)
-    }
+    val spark = Bench.buildSession()
     names.foreach { n =>
-      // the ledger is a JVM global set only by recursion-surface
-      // queries — clear it per query or a later query in the same run
-      // would print the previous one's phases under its own name
-      graft.etl.Relational.lastRecursionPhases = Map.empty
-      Bench.consume(SparkEntry.queries(n)(spark, sfDir)) // warmup
-      reset()
+      val q = SparkEntry.queries(n)
+      Bench.time(spark, sfDir, q, Bench.FreshJvmWarmups, 0)
       val times = (1 to reps).map { rep =>
+        // the ledger is a JVM global set only by recursion-surface
+        // queries — clear it per pass or a later query in the same run
+        // would print the previous one's phases under its own name
         graft.etl.Relational.lastRecursionPhases = Map.empty
-        val t0 = System.nanoTime()
-        Bench.consume(SparkEntry.queries(n)(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        reset()
+        val t = Bench.time(spark, sfDir, q, 0, 1).head
         // recursion-surface queries publish a phase ledger: print it
         // PER REP so a pass-over-pass drift (r18 verdict: sql_recursive's
         // in-sweep passes rose monotonically) is attributable to a
@@ -58,9 +33,9 @@ object TimeQuery {
         if (phases.nonEmpty)
           println(s"PHASES $n[$rep]: " + phases.map { case (k, v) =>
             f"$k=$v%.2f" }.mkString(" ") + " s")
-        dt
+        t
       }
-      println(f"TIME $n: ${times.map(t => f"$t%.2f").mkString(", ")} s")
+      println(Bench.timeLine(n, times))
     }
     spark.stop()
   }

@@ -20,8 +20,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Usage:
   *   runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [name ...]
-  * writes <outDir>/<name>_<suffix>.txt per query. Session shape matches
-  * graft.Bench (same master/shuffle partitions via SPARK_GRAFT_CPUS).
+  * writes <outDir>/<name>_<suffix>.txt per query, in the shared
+  * graft.Bench.buildSession shape.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -31,9 +31,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.Bench.Headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.Bench.buildSession(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.buildSession()
     Files.createDirectories(Paths.get(outDir))
     val sink = new java.lang.StringBuilder
     // stage ledger: the no-UI substitute for the Stages tab (guide §7.1) —

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench main itself is exercised by the driver; these pin the
-  * pure pieces — the BENCH_FULL baseline parse the inflation guard
-  * depends on (a silent mis-parse would disable the guard without any
-  * visible signal).
+/** The harness mains themselves are exercised by the driver; these pin
+  * their pieces — the timing loop's failure handling, the fresh-JVM
+  * parse, Verify's JSON writer, and the BENCH_FULL baseline parse the
+  * inflation guard depends on (a silent mis-parse would disable the
+  * guard without any visible signal).
   */
 class BenchSpec extends AnyFunSuite with SparkSpec {
 
@@ -70,17 +72,62 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
     assert(b.exists(_ > 0), "headline_gate.baseline_sec must be present")
   }
 
-  test("freshJvmRetry: parse contract matches BenchOne's output line") {
-    // the regex lives inline in freshJvmRetry; pin the line format both
-    // sides agree on so a drive-by reformat of BenchOne's println can't
-    // silently turn every fresh retry into None
-    val line = "BENCH_ONE graph_wcc 3.214"
-    val m = "BENCH_ONE graph_wcc ([-0-9.]+)".r.findFirstMatchIn(line)
-    assert(m.map(_.group(1).toDouble) === Some(3.214))
-    val fail = "BENCH_ONE graph_wcc -1.0"
-    val mf = "BENCH_ONE graph_wcc ([-0-9.]+)".r.findFirstMatchIn(fail)
-      .map(_.group(1).toDouble).filter(_ >= 0)
-    assert(mf === None, "failure sentinel must yield None, not a number")
+  test("freshJvmRetry: parses the TIME line TimeQuery prints") {
+    // round trip through the printer TimeQuery uses and the parser
+    // freshJvmRetry uses, so a reformat of either side that breaks the
+    // other can't silently turn every fresh retry into None
+    val out = "PHASES graph_wcc[1]: derive=0.50 s\n" +
+      Bench.timeLine("graph_wcc", Seq(3.2144)) + "\n"
+    assert(Bench.parseTimeLine("graph_wcc", out) === Some(3.214))
+    assert(Bench.parseTimeLine("graph_wcc",
+      Bench.timeLine("graph_wcc", Seq(-1.0))) === None,
+      "failure sentinel must yield None, not a number")
+    assert(Bench.parseTimeLine("graph", out) === None)
+  }
+
+  test("time: a non-fatal failure records -1.0 and releases the leases") {
+    val cp = spark.range(5).toDF("id").localCheckpoint(true)
+    val rdd = cp.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.get
+    val t = Bench.time(spark, "unused", (_, _) => {
+      CheckpointLease.track(cp)
+      throw new RuntimeException("boom")
+    }, 1, 2)
+    assert(t === Seq(-1.0, -1.0))
+    assert(rdd.getStorageLevel === StorageLevel.NONE)
+    // the lease list no longer holds the frame: re-pinning its RDD and
+    // releasing every lease again must leave the RDD pinned
+    rdd.persist(StorageLevel.MEMORY_ONLY)
+    CheckpointLease.releaseAll()
+    assert(rdd.getStorageLevel !== StorageLevel.NONE)
+    rdd.unpersist()
+    val ok = Bench.time(spark, "unused", (s, _) => s.range(3).toDF(), 0, 1)
+    assert(ok.size === 1 && ok.head >= 0)
+  }
+
+  test("time: a fatal error propagates from warmup and timed passes") {
+    val oom: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame =
+      (_, _) => throw new OutOfMemoryError("test")
+    intercept[OutOfMemoryError](Bench.time(spark, "unused", oom, 1, 0))
+    intercept[OutOfMemoryError](Bench.time(spark, "unused", oom, 0, 1))
+  }
+
+  test("Verify.writeJsonObject: control characters and quotes round-trip") {
+    val sql = "select\t'a\"b' -- c\\d\r\n\u0001"
+    val dir = java.nio.file.Files.createTempDirectory("verify_json")
+    val f = dir.resolve("oracle_sql.json")
+    Verify.writeJsonObject(f.toString, Seq("q" -> sql, "n" -> 2))
+    val txt = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    // a strict JSON reader (the driver's json.load) rejects raw control
+    // characters inside strings
+    assert(!txt.exists(_ < ' '), txt)
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    assert(back.get("q").asText === sql)
+    assert(back.get("n").asInt === 2)
+    java.nio.file.Files.delete(f)
+    java.nio.file.Files.delete(dir)
   }
 
   test("benchFullBaseline: parses queries_sec, ignores header numbers, " +

@@ -34,7 +34,7 @@ out = {
     "inflated": raw.get("inflated", []),
     "isolated_retry_sec": raw.get("isolated_retry_sec", {}),
     # r17 verdict #1: flagged queries whose same-JVM isolated retry was
-    # still above the guard get ONE cold-JVM re-measure (graft.BenchOne)
+    # still above the guard get ONE cold-JVM re-measure (graft.TimeQuery)
     # so pressure-vs-regression is adjudicated inside the artifact.
     "fresh_jvm_retry_sec": raw.get("fresh_jvm_retry_sec", {}),
     # r18 verdict #4: warmup passes the fresh tier ran before its timed
