@@ -1146,20 +1146,16 @@ object Relational {
   def recursiveComponentsSql(spark: SparkSession, edges: DataFrame,
       batchDepth: Int = 4, maxPasses: Int = 1024,
       shortcutEdgeCap: Long = 1_000_000L, shortcutSteps: Int = 1): DataFrame = {
-    val dbgT0 = System.nanoTime()
     // phase ledger: ALWAYS recorded (two nanoTime reads per phase —
     // free), published to [[lastRecursionPhases]] on return so
     // TimeQuery can print it and RelationalSpec can ASSERT the
-    // recursion-cost contract instead of narrating it; the
-    // SPARK_GRAFT_REC_DEBUG stderr print rides the same ledger
+    // recursion-cost contract instead of narrating it
     val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
-    var phaseT = dbgT0
+    var phaseT = System.nanoTime()
     def phase(tag: String): Unit = {
       val now = System.nanoTime()
       phases(tag) = phases.getOrElse(tag, 0.0) + (now - phaseT) / 1e9
       phaseT = now
-      if (sys.env.contains("SPARK_GRAFT_REC_DEBUG"))
-        System.err.println(f"[recdbg] $tag: ${(now - dbgT0) / 1e9}%.2f s")
     }
     val und1 = edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(edges.select(col("doc_b").as("u"), col("doc_a").as("v")))

@@ -1121,10 +1121,11 @@ object Dedup {
   /** MinHash signature per doc WITHOUT any shuffle: the codegen'd
     * [[graft.functions.MinHashSignature]] expression computes all k slot
     * minima in one pass over the doc's own shingle array — a purely
-    * narrow projection, in contrast to [[minhashSignaturesFromShingles]]'
-    * explode + groupBy (which re-shuffles the whole corpus by doc_id).
-    * Slot hashes replicate `xxhash64(slot, shingle)` exactly, so both
-    * paths produce identical signatures (spec-pinned). This is also the
+    * narrow projection, in contrast to an explode + groupBy of
+    * `min(xxhash64(slot, shingle))` (which re-shuffles the whole corpus by
+    * doc_id). Slot hashes replicate `xxhash64(slot, shingle)` exactly, so
+    * both forms produce identical signatures (spec-pinned against the
+    * aggregated form kept in the tests as the oracle). This is also the
     * form a STREAMING near-dup pass needs: signatures per micro-batch row
     * with no stateful aggregation (see
     * [[graft.streaming.NearDupStream]]). Docs with no 3-shingle (under 3
@@ -1142,23 +1143,6 @@ object Dedup {
         graft.functions.MinHashSignature.sig(col("sh_arr"), MinhashK)
           .as("sig"))
 
-  /** MinHash signature per doc: (doc_id, sig array<long>[MinhashK]). */
-  def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashSignaturesFromShingles(shingleIds(docs))
-
-  def minhashSignaturesFromShingles(sh: DataFrame): DataFrame = {
-    // xxhash64 over (slot, shingle) as two typed args — unambiguous
-    // seeding with no separator-collision risk between slot index and
-    // shingle text, so the k hash functions stay independent
-    val sigCols = (0 until MinhashK).map { j =>
-      min(xxhash64(lit(j), col("shingle"))).as(s"h$j")
-    }
-    sh.groupBy("doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until MinhashK).map(j => col(s"h$j")): _*).as("sig"))
-  }
-
   /** LSH candidate pairs: same band hash in any band.
     *
     * r20: `banded` feeds BOTH self-join sides, and its narrow
@@ -1170,6 +1154,20 @@ object Dedup {
     * and the join reads both sides from the same shuffle — also the
     * only viable shape at corpus scale, where the band table could
     * never broadcast.
+    *
+    * Skew assumption: the hint removes the sort-merge fallback, so one
+    * (band, band_hash) bucket becomes one build-side hash map in one
+    * task, and emits its n·(n−1)/2 pairs there before the `distinct`.
+    * Nothing in the plan caps a bucket; what bounds it today is the
+    * input. A bucket holds the docs whose [[BandRows]] slot minima all
+    * coincide in that band — a near-duplicate cluster plus its exact
+    * copies — and the corpora this engine runs on plant small clusters.
+    * A boilerplate-heavy corpus (templated pages, shared licence or
+    * footer text) puts thousands of docs in one bucket. Such corpora
+    * need a stop-band cap like [[graft.streaming.NearDupStream]]'s
+    * `maxPerBucket`: count the docs per bucket and drop the buckets
+    * above the cap before the join, since a bucket that hot carries no
+    * discriminating signal.
     */
   def lshCandidates(sigs: DataFrame): DataFrame = {
     val nBands = MinhashK / BandRows
@@ -1330,6 +1328,8 @@ object Dedup {
     //    own), so the candidate set is identical while the exchange
     //    carries 2 longs instead of a ~20-byte string per band row
     //    and the map side skips 16 string builds per doc.
+    // The hint carries lshCandidates' skew assumption: one hot bucket
+    // is one build-side hash map in one task (see its scaladoc).
     val banded = sigs.select(col("doc_id"), posexplode(array(
       (0 until nBands).map(b => struct(
         (0 until BandRows).map(r =>

@@ -11,12 +11,12 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * reflect/transpose rotation per bit level, most-significant first).
   *
   * Drop-in alternative to the Morton interleave in
-  * [[graft.sources.Layout]]: every unit step along the Hilbert curve
+  * [[graft.plans.Layout]]: every unit step along the Hilbert curve
   * moves to a 4-adjacent cell (Morton jumps across the plane at quadrant
   * boundaries), so consecutive rows land in genuinely neighboring cells
   * and per-file min/max ranges come out tighter on both dimensions.
   * Codegen'd so the per-row walk stays inside whole-stage codegen like
-  * the surrounding scale/write pipeline.
+  * the surrounding scale projection.
   */
 case class HilbertIndex(left: Expression, right: Expression, bits: Int)
     extends BinaryExpression {

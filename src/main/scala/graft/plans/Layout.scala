@@ -28,10 +28,9 @@ import graft.Tables
   * relies on warehouse-side layout; these operators supply the layout
   * layer a Spark-native lakehouse needs at scale.
   *
-  * Companion: [[graft.sources.Layout]] is the WRITE side (actually
-  * rewriting files Z/Hilbert-ordered, crash-safe compaction); this
-  * object is the PLANNING/AUDIT side, expressed as oracle-checkable
-  * queries.
+  * Companion: [[graft.sources.Layout]] is the WRITE side (crash-safe
+  * compaction); this object is the PLANNING/AUDIT side, expressed as
+  * oracle-checkable queries.
   */
 object Layout {
 

@@ -198,22 +198,6 @@ object Bronze {
     }
   }
 
-  /** Schema-evolution read: union the schemas of all parquet footers
-    * under `path` (columns added by newer writers come back null-filled
-    * on old files). Off by default in Spark because it reads every
-    * footer — use it only on ingest boundaries where writers evolve; at
-    * rest, migrate to one schema.
-    */
-  def readParquetEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** JSON-lines source/sink with explicit schema (no inference pass). */
-  def readJson(spark: SparkSession, path: String, table: String): DataFrame =
-    spark.read.schema(schemas(table)).option("mode", "FAILFAST").json(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
   /** ORC source/sink — columnar alternative to parquet, same pushdown. */
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
@@ -415,23 +399,6 @@ object Bronze {
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1""".stripMargin,
   )
-
-  /** S2-shape generic JDBC reader (the reference reads every zone through
-    * this; our engine keeps it for external-database ingest). Partitioned
-    * on a numeric column — the reference's single-partition read was its
-    * bottleneck (SURVEY.md §6, JDBC parallelism = 1).
-    */
-  def readJdbc(spark: SparkSession, url: String, table: String,
-      partitionColumn: String, lowerBound: Long, upperBound: Long,
-      numPartitions: Int): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("partitionColumn", partitionColumn)
-      .option("lowerBound", lowerBound)
-      .option("upperBound", upperBound)
-      .option("numPartitions", numPartitions)
-      .load()
 
   /** S3 (JDBC parity): external-database sink mirroring the reference's
     * per-zone `df.write.format("jdbc")...mode("overwrite")` (reference

@@ -1,97 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.functions.col
 
-/** Multi-dimensional data layout: Z-order (Morton-curve) clustering of a
-  * table on two key columns before writing, so parquet min/max footer
-  * stats become tight on BOTH dimensions and a selective filter on either
-  * key skips most files.
-  *
-  * A single-column sort gives perfect skipping on that column and none on
-  * any other; interleaving the bits of two normalized keys places rows
-  * close in (x, y) space into the same files — the standard lakehouse
-  * `OPTIMIZE ZORDER BY` layout, reproduced here with nothing but built-in
-  * expressions (bit ops + range repartition + within-partition sort).
-  *
-  * == Scale design ==
-  * The z-value is a narrow projection; `repartitionByRange` samples it
-  * (one pass) and range-partitions — the same shuffle a global sort pays,
-  * but the payoff is at READ time forever after: a filter on either
-  * dimension prunes to O(selectivity) of the files. Keys are normalized
-  * by min/max scaling from ONE distributed agg (4 scalars to the driver)
-  * — a global `percent_rank` window would funnel the whole table through
-  * a single task, a non-starter at 100 TB (round-3 advice). Min/max
-  * scaling under-fills the z-space on heavily skewed keys; pre-transform
-  * such keys (log, bucketed rank) before calling if that matters.
+/** Parquet table maintenance: small-file compaction with crash-safe
+  * staging. Read-side clustering lives in [[graft.plans.Layout]].
   */
 object Layout {
-
-  val ZBits = 16 // bits per dimension → 32-bit z-value
-
-  /** Bit-interleave two [0, 2^ZBits) integer columns (Morton code). */
-  def morton(x: Column, y: Column): Column =
-    (0 until ZBits).map { i =>
-      val xb = shiftright(x, i).bitwiseAND(1).cast("long") * (1L << (2 * i))
-      val yb = shiftright(y, i).bitwiseAND(1).cast("long") * (1L << (2 * i + 1))
-      xb + yb
-    }.reduce(_ + _)
-
-  /** Linear min/max scale of a numeric column to [0, 2^ZBits). */
-  private def scaled(c: Column, lo: Double, hi: Double): Column = {
-    val span = if (hi > lo) hi - lo else 1.0
-    (((c.cast("double") - lo) / span) * ((1 << ZBits) - 1)).cast("int")
-  }
-
-  /** Z-order `df` by two numeric columns and write `files` parquet files. */
-  def writeZOrdered(df: DataFrame, path: String, colA: String,
-      colB: String, files: Int): Unit =
-    writeCurveOrdered(df, path, colA, colB, files, morton)
-
-  /** Hilbert-order variant: same scaffold, but the cluster key is the
-    * Hilbert-curve distance ([[graft.functions.HilbertIndex]], codegen'd)
-    * instead of the Morton interleave. Hilbert's unit steps are always
-    * 4-adjacent cells — no Morton quadrant jumps — so file min/max spans
-    * come out tighter at equal file counts (LayoutSpec measures both).
-    */
-  def writeHilbertOrdered(df: DataFrame, path: String, colA: String,
-      colB: String, files: Int): Unit =
-    writeCurveOrdered(df, path, colA, colB, files,
-      graft.functions.HilbertIndex.index(_, _, ZBits))
-
-  private def writeCurveOrdered(df: DataFrame, path: String, colA: String,
-      colB: String, files: Int, curve: (Column, Column) => Column): Unit = {
-    val r = df.agg(
-      min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).first()
-    require(!r.anyNull,
-      s"curve layout($colA, $colB): input is empty or a cluster column " +
-        "is all-NULL — no min/max to scale against")
-    df.withColumn("__z",
-        curve(scaled(col(colA), r.getDouble(0), r.getDouble(1)),
-          scaled(col(colB), r.getDouble(2), r.getDouble(3))))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Per-file min/max tightness of `keyCol` under a layout: the mean
-    * fraction of the key's global span each output file covers (1.0 =
-    * every file spans everything = no skipping; small = tight zone maps).
-    * Reads the written files back with `input_file_name` — a layout
-    * QUALITY metric, cheap at test scale; at 100 TB read the footers.
-    */
-  def fileSpanFraction(df: DataFrame, keyCol: String): Double = {
-    val global = df.agg(
-      (max(col(keyCol)) - min(col(keyCol))).cast("double")).first().getDouble(0)
-    val spans = df.withColumn("__f", input_file_name())
-      .groupBy("__f")
-      .agg(((max(col(keyCol)) - min(col(keyCol))).cast("double") / global)
-        .as("frac"))
-      .agg(avg("frac")).first().getDouble(0)
-    spans
-  }
 
   /** Small-file compaction (the lakehouse `OPTIMIZE`): rewrite a parquet
     * table directory into `targetFiles` files — range-sorted by `sortKey`

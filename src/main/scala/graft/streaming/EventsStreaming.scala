@@ -8,19 +8,20 @@ import graft.Tables
 /** Windowed event analytics (SURVEY.md §2.9/§7.4 streaming mandate):
   * tumbling, sliding, and session windows over the `events` table.
   *
-  * Each aggregation exists twice with IDENTICAL semantics:
-  *  - a batch form (`*Batch`) registered in the driver contract and
-  *    hash-compared against a DuckDB oracle;
-  *  - a Structured Streaming form (`*Stream`) taking any streaming
-  *    DataFrame with the events schema, carrying a watermark so state is
-  *    bounded — exercised via MemoryStream in EventsStreamingSpec.
+  * Every aggregation has a batch form (`*Batch`) registered in the
+  * driver contract and hash-compared against a DuckDB oracle. A
+  * Structured Streaming form (`*Stream`) exists only where its spec pins
+  * what the batch form cannot — state carried across micro-batches and
+  * bounded or finalized by the watermark — exercised via MemoryStream in
+  * EventsStreamingSpec.
   *
   * == Scale design ==
-  * Watermarks bound state: tumbling/sliding state is O(windows × types) and
-  * session state O(active users), independent of stream length. The batch
-  * twins are single hash-shuffle groupBys with map-side partial
-  * aggregation; window assignment is a narrow projection. Money sums use
-  * the exact-integer-cents contract (see SparkEntry scaladoc).
+  * Watermarks bound the streaming forms' state: dedup state holds the ids
+  * inside the watermark horizon, join state the events inside the
+  * attribution interval, independent of stream length. The batch twins
+  * are single hash-shuffle groupBys with map-side partial aggregation;
+  * window assignment is a narrow projection. Money sums use the
+  * exact-integer-cents contract (see SparkEntry scaladoc).
   */
 object EventsStreaming {
 
@@ -57,33 +58,6 @@ object EventsStreaming {
           .as("span_secs"),
         col("n_events"), col("value_cents"))
 
-  /** Streaming twin of [[hourlyBatch]] with a 10-minute watermark. */
-  def hourlyStream(ev: DataFrame): DataFrame =
-    ev.withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), centsSum("value").as("value_cents"))
-      .select(
-        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n_events"), col("value_cents"))
-
-  /** Streaming twin of [[slidingBatch]] with a 10-minute watermark. */
-  def slidingStream(ev: DataFrame): DataFrame =
-    ev.withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"), centsSum("value").as("value_cents"))
-      .select(
-        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n_events"), col("value_cents"))
-
-  /** File-source streaming: treat a directory of parquet files as a
-    * stream (the production pattern for continuously-landing data).
-    * Caller supplies the schema (streaming reads don't infer).
-    */
-  def fileStream(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
-
   /** Streaming exact dedup by event_id: duplicates arriving within the
     * watermark horizon are dropped, and state for an id is reclaimed once
     * the watermark passes it — bounded state, unlike a plain streaming
@@ -93,26 +67,6 @@ object EventsStreaming {
   def dedupStream(ev: DataFrame): DataFrame =
     ev.withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-static enrichment: each micro-batch joins the customer
-    * dimension — the standard fact-stream ⋈ dim pattern. No stream
-    * state at all: the static side re-resolves per batch, so a
-    * refreshed dim table is picked up without restarting the query.
-    *
-    * DATA-DEPENDENT broadcast (r17 verdict #4): customer grows with
-    * scale factor — unlike the bounded codebook/calendar hints, a
-    * hardcoded `broadcast()` here OOMs executors once the dim passes
-    * the threshold, so the hint goes through the exact-bytes advisor
-    * (one planning-time scan of the projected dim; AQE cannot be the
-    * gate on a stream-static join).
-    */
-  def enrichStream(ev: DataFrame, cust: DataFrame): DataFrame =
-    ev.join(
-      graft.plans.Layout.advisedBroadcast(
-        cust.select(col("c_custkey").as("user_id"),
-          col("c_mktsegment"), col("c_nationkey")),
-        fixed = 12L, strCols = Seq("c_mktsegment")),
-      Seq("user_id"), "left")
 
   /** Click→purchase attribution: every purchase within 30 minutes of a
     * same-user click (batch form — the oracle-checked twin of

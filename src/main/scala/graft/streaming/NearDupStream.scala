@@ -105,38 +105,4 @@ object NearDupStream {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(pairEmitter(maxPerBucket))
   }
-
-  /** Band table of the ALREADY-INGESTED corpus — the stored index state
-    * the static-probe path joins against (the streaming counterpart of
-    * [[graft.ext.Dedup.minhashIncremental]]'s index side). Built
-    * batch-side with the identical banding, refreshed on the ingestion
-    * cadence.
-    */
-  def staticIndexBands(indexDocs: DataFrame): DataFrame =
-    bandedDocs(indexDocs).toDF()
-      .withColumnRenamed("doc_id", "index_doc_id")
-
-  /** STATELESS ingest-time dedup screen: incoming docs band per-row
-    * (narrow) and probe the precomputed index band table through a
-    * stream-static broadcast join — no streaming state at all, so
-    * throughput is bounded by the join and restarts carry nothing. This
-    * is the right shape when the reference set is the (slowly-growing)
-    * indexed corpus rather than the stream itself:
-    * [[candidatesStream]]'s stateful buckets handle within-stream dups,
-    * this handles stream-vs-index, and a production ingest runs both.
-    * Emits one row per (new doc, indexed doc, band) collision in Append
-    * mode; exact-Jaccard adjudication against the doc store happens
-    * downstream, exactly as in the batch operator.
-    */
-  def probeStaticIndex(newDocs: DataFrame,
-      indexBands: DataFrame): DataFrame =
-    // DATA-DEPENDENT broadcast (r17 verdict #4): the band index grows
-    // with the indexed corpus, so the hint is advisor-gated (exact
-    // bytes, one planning scan of the static side — callers should pass
-    // a materialized index, which a standing serving index is anyway)
-    bandedDocs(newDocs).toDF()
-      .join(graft.plans.Layout.advisedBroadcast(indexBands, fixed = 16L),
-        Seq("band_hash"))
-      .select(col("doc_id").as("new_doc_id"), col("index_doc_id"),
-        col("band_hash"))
 }

@@ -133,7 +133,7 @@ class DedupSpec extends SparkSpec {
     val d = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val exact = Dedup.ngramJaccardPairs(d, 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val cands = Dedup.lshCandidates(Dedup.minhashSignatures(d))
+    val cands = Dedup.lshCandidates(MinHashOracle.minhashSignatures(d))
       .as[(Long, Long)].collect().toSet
     val missed = exact -- cands
     assert(missed.isEmpty, s"LSH missed ${missed.size} of ${exact.size} true pairs")

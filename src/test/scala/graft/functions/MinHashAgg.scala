@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions.udaf
   * `HashAggregate` on k `min()` columns but with one buffer object instead
   * of k codegen columns (kinder to codegen limits as k grows to 128+).
   *
-  * Hashes are FNV-1a-64 seeded per signature slot — JVM-deterministic
-  * (no oracle; DuckDB can't replicate, driver records rows-only).
+  * Hashes are FNV-1a-64 seeded per signature slot — JVM-deterministic.
+  * No query runs it: MinHashAggSpec keeps it as a one-pass reference whose
+  * slot-agreement rate must estimate the exact shingle Jaccard.
   */
 class MinHashAgg(k: Int) extends Aggregator[String, Array[Long], Array[Long]] {
 

@@ -226,8 +226,7 @@ class LayoutSpec extends SparkSpec {
     // in place (Graph's NodeBroadcastMaxRows/broadcastMaxEdges gates,
     // supportFor's bounded-by-contract cand). ADVISED hints are the
     // data-dependent set routed through Layout.advisedBroadcast
-    // (corpus/dim-proportional sides: enrichStream's customer dim,
-    // probeStaticIndex's band index, containmentPairs' bg/bSizes,
+    // (corpus/dim-proportional sides: containmentPairs' bg/bSizes,
     // Multimodal's hot heads, erasureAudit's key list, checkRef's
     // parent keys, the embedding label/language slices, q8/q17/q15's
     // dim aggregates, Silver/Gold's dims). Three data-dependent sites
@@ -270,9 +269,7 @@ class LayoutSpec extends SparkSpec {
       "ext/Stats.scala" -> (19, 0),
       "ext/TextAnalysis.scala" -> (13, 0),
       "operators/SkewJoin.scala" -> (1, 0),
-      "plans/Layout.scala" -> (6, 1),
-      "streaming/EventsStreaming.scala" -> (0, 1),
-      "streaming/NearDupStream.scala" -> (0, 1))
+      "plans/Layout.scala" -> (6, 1))
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val actual = scala.collection.mutable.Map.empty[String, (Int, Int)]
     java.nio.file.Files.walk(root).forEach { p =>

@@ -2,10 +2,11 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.Tables
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
-/** Z-order layout: both dimensions must get usable file-level min/max
-  * pruning, where a single-column sort gives pruning on one dimension and
-  * none on the other.
+/** Compaction: the file count changes, the rows do not, and a crash
+  * between the staged write and the swap is recovered.
   */
 class LayoutSpec extends SparkSpec {
 
@@ -13,52 +14,18 @@ class LayoutSpec extends SparkSpec {
   private def tmp(name: String) =
     s"${System.getProperty("java.io.tmpdir")}/graft_layout/$name"
 
-  test("z-order tightens file spans on BOTH keys vs single-column sort") {
-    val orders = Tables.orders(spark, sf)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val files = 8
-
-    // baseline: range-sort by o_custkey only
-    val sortedPath = tmp("sorted")
-    orders.repartitionByRange(files, orders("o_custkey"))
-      .sortWithinPartitions("o_custkey")
-      .write.mode("overwrite").parquet(sortedPath)
-
-    val zPath = tmp("zorder")
-    Layout.writeZOrdered(orders, zPath, "o_custkey", "o_totalprice", files)
-
-    val sorted = spark.read.parquet(sortedPath)
-    val z = spark.read.parquet(zPath)
-
-    val sortedKey = Layout.fileSpanFraction(sorted, "o_custkey")
-    val sortedOther = Layout.fileSpanFraction(sorted, "o_totalprice")
-    val zKey = Layout.fileSpanFraction(z, "o_custkey")
-    val zOther = Layout.fileSpanFraction(z, "o_totalprice")
-
-    // single-column sort: near-perfect on its key, useless on the other
-    assert(sortedKey < 0.3, s"sorted key span $sortedKey")
-    assert(sortedOther > 0.8, s"sorted other span $sortedOther")
-    // z-order: genuinely tight on BOTH dimensions — each file must cover
-    // well under the full span, and the non-sort dimension must improve
-    // by a wide margin over the single-column layout
-    assert(zKey < 0.65, s"z key span $zKey")
-    assert(zOther < 0.65, s"z other span $zOther")
-    assert(zOther < sortedOther / 1.5,
-      s"z other span $zOther not an improvement over $sortedOther")
-  }
-
-  test("hilbert layout tightens file spans on both keys too") {
-    val orders = Tables.orders(spark, sf)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val hPath = tmp("hilbert")
-    Layout.writeHilbertOrdered(orders, hPath, "o_custkey", "o_totalprice", 8)
-    val h = spark.read.parquet(hPath)
-    val hKey = Layout.fileSpanFraction(h, "o_custkey")
-    val hOther = Layout.fileSpanFraction(h, "o_totalprice")
-    assert(hKey < 0.65, s"hilbert key span $hKey")
-    assert(hOther < 0.65, s"hilbert other span $hOther")
-    assert(h.count() === orders.count())
-    info(f"hilbert spans: key $hKey%.2f / other $hOther%.2f")
+  /** Per-file min/max tightness of `keyCol`: the mean fraction of the
+    * key's global span each file covers (1.0 = every file spans
+    * everything = no skipping; small = tight zone maps).
+    */
+  private def fileSpanFraction(df: DataFrame, keyCol: String): Double = {
+    val global = df.agg(
+      (max(col(keyCol)) - min(col(keyCol))).cast("double")).first().getDouble(0)
+    df.withColumn("__f", input_file_name())
+      .groupBy("__f")
+      .agg(((max(col(keyCol)) - min(col(keyCol))).cast("double") / global)
+        .as("frac"))
+      .agg(avg("frac")).first().getDouble(0)
   }
 
   test("compact: small files merge to the target count, rows identical, " +
@@ -70,14 +37,14 @@ class LayoutSpec extends SparkSpec {
     def dataFiles = new java.io.File(path).listFiles()
       .count(f => f.getName.endsWith(".parquet"))
     assert(dataFiles === 32)
-    val before = Layout.fileSpanFraction(spark.read.parquet(path), "o_custkey")
+    val before = fileSpanFraction(spark.read.parquet(path), "o_custkey")
     Layout.compact(spark, path, targetFiles = 4, sortKey = Some("o_custkey"))
     assert(dataFiles === 4)
     val back = spark.read.parquet(path)
     assert(back.count() === orders.count())
     assert(back.select("o_orderkey").except(orders.select("o_orderkey"))
       .isEmpty)
-    val after = Layout.fileSpanFraction(back, "o_custkey")
+    val after = fileSpanFraction(back, "o_custkey")
     // 32 hash-scattered files each span ~everything; 4 range-sorted ones
     // are tight
     assert(after < before / 2, s"span $after vs scattered $before")
@@ -112,17 +79,5 @@ class LayoutSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Layout.recover(spark, path)
     assert(spark.read.parquet(path).count() === orders.count())
-  }
-
-  test("writeZOrdered preserves rows and schema") {
-    val orders = Tables.orders(spark, sf)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val path = tmp("roundtrip")
-    Layout.writeZOrdered(orders, path, "o_custkey", "o_totalprice", 4)
-    val back = spark.read.parquet(path)
-    assert(back.columns.sorted.sameElements(orders.columns.sorted))
-    assert(back.count() === orders.count())
-    assert(back.select("o_orderkey").except(orders.select("o_orderkey"))
-      .isEmpty)
   }
 }

@@ -54,86 +54,6 @@ class EventsStreamingSpec extends SparkSpec {
     assert(starts.toSeq === Seq("2024-01-01 00:00:00", "2024-01-01 00:30:00"))
   }
 
-  test("streaming twin matches batch on the same data (MemoryStream)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val sdf = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = EventsStreaming.hourlyStream(sdf)
-      .writeStream.format("memory").queryName("hourly_out")
-      .outputMode("complete").start()
-    try {
-      mem.addData(
-        (1L, ts("2024-01-01 00:05:00"), 7L, "click", 1.5),
-        (2L, ts("2024-01-01 00:55:00"), 8L, "click", 2.5),
-        (3L, ts("2024-01-01 01:05:00"), 7L, "view", 4.0))
-      q.processAllAvailable()
-      val streamed = spark.table("hourly_out")
-        .select("window_start", "event_type", "n_events", "value_cents")
-        .as[(String, String, Long, Long)].collect().toSet
-      val batch = EventsStreaming.hourlyBatch(
-        events((1L, "2024-01-01 00:05:00", 7L, "click", 1.5),
-          (2L, "2024-01-01 00:55:00", 8L, "click", 2.5),
-          (3L, "2024-01-01 01:05:00", 7L, "view", 4.0)))
-        .as[(String, String, Long, Long)].collect().toSet
-      assert(streamed === batch)
-      assert(streamed === Set(
-        ("2024-01-01 00:00:00", "click", 2L, 400L),
-        ("2024-01-01 01:00:00", "view", 1L, 400L)))
-    } finally q.stop()
-  }
-
-  test("file-source stream over parquet matches the batch aggregate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val ord = graft.Tables.orders(spark, "/root/testdata/sf0.001")
-    ord.write.mode("overwrite").parquet(dir)
-    val stream = EventsStreaming.fileStream(spark, dir,
-      graft.sources.Bronze.schemas("orders"))
-    val agg = stream
-      .groupBy(org.apache.spark.sql.functions.window($"o_orderdate", "30 days"),
-        $"o_orderstatus")
-      .count()
-    val q = agg.writeStream.format("memory").queryName("orders_stream")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("orders_stream")
-        .select($"window.start".cast("string"), $"o_orderstatus", $"count")
-        .as[(String, String, Long)].collect().toSet
-      val batch = ord
-        .groupBy(org.apache.spark.sql.functions.window($"o_orderdate", "30 days"),
-          $"o_orderstatus")
-        .count()
-        .select($"window.start".cast("string"), $"o_orderstatus", $"count")
-        .as[(String, String, Long)].collect().toSet
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("sliding streaming twin matches sliding batch (MemoryStream)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val sdf = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = EventsStreaming.slidingStream(sdf)
-      .writeStream.format("memory").queryName("sliding_out")
-      .outputMode("complete").start()
-    try {
-      mem.addData((1L, ts("2024-01-01 00:40:00"), 7L, "click", 1.0))
-      q.processAllAvailable()
-      val streamed = spark.table("sliding_out")
-        .select("window_start", "event_type", "n_events", "value_cents")
-        .as[(String, String, Long, Long)].collect().toSet
-      val batch = EventsStreaming.slidingBatch(
-        events((1L, "2024-01-01 00:40:00", 7L, "click", 1.0)))
-        .as[(String, String, Long, Long)].collect().toSet
-      assert(streamed === batch)
-      assert(streamed.size === 2)
-    } finally q.stop()
-  }
-
   test("dedupStream: duplicate event_ids within the watermark collapse") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
@@ -154,29 +74,6 @@ class EventsStreamingSpec extends SparkSpec {
       val ids = spark.table("dedup_out").select("event_id")
         .as[Long].collect().sorted.toSeq
       assert(ids === Seq(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("enrichStream: dim attributes attach, unmatched stay null") {
-    implicit val sqlCtx = spark.sqlContext
-    val cust = Seq((7L, "cname", 4, 1.0, "BUILDING"))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-    val sdf = mem.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = EventsStreaming.enrichStream(sdf, cust)
-      .writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (1L, ts("2024-01-01 00:00:00"), 7L, "click", 1.0),
-        (2L, ts("2024-01-01 00:01:00"), 9L, "view", 2.0))
-      q.processAllAvailable()
-      val out = spark.table("enrich_out")
-        .select("event_id", "c_mktsegment").as[(Long, Option[String])]
-        .collect().toMap
-      assert(out(1L) === Some("BUILDING"))
-      assert(out(2L) === None)
     } finally q.stop()
   }
 

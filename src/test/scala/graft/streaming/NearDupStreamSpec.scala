@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ext.Dedup
+import graft.ext.{Dedup, MinHashOracle}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class NearDupStreamSpec extends SparkSpec {
@@ -28,7 +28,7 @@ class NearDupStreamSpec extends SparkSpec {
       val streamed = spark.table("neardup_out")
         .select("doc_a", "doc_b").distinct()
         .as[(Long, Long)].collect().toSet
-      val batch = Dedup.lshCandidates(Dedup.minhashSignatures(
+      val batch = Dedup.lshCandidates(MinHashOracle.minhashSignatures(
           Seq((1L, near1), (2L, near2), (3L, far)).toDF("doc_id", "text")))
         .as[(Long, Long)].collect().toSet
       assert(streamed === batch)
@@ -40,7 +40,7 @@ class NearDupStreamSpec extends SparkSpec {
   test("narrow signatures equal the aggregated signatures") {
     val docs = Seq((1L, near1), (2L, near2), (3L, far), (4L, "too short"))
       .toDF("doc_id", "text")
-    val agg = Dedup.minhashSignatures(docs)
+    val agg = MinHashOracle.minhashSignatures(docs)
       .as[(Long, Seq[Long])].collect().toMap
     val narrow = Dedup.minhashSignaturesNarrow(docs)
       .as[(Long, Seq[Long])].collect().toMap
@@ -67,36 +67,6 @@ class NearDupStreamSpec extends SparkSpec {
       // uncapped would be C(11,2)=55 distinct pairs; the cap kills the
       // bucket after 3 members, so only pairs among the first few emit
       assert(pairs <= 6, s"cap did not bound emission: $pairs pairs")
-    } finally q.stop()
-  }
-
-  test("static-index probe: stream-static join flags index dups, statelessly") {
-    implicit val sqlCtx = spark.sqlContext
-    val index = NearDupStream.staticIndexBands(
-      Seq((100L, near1), (200L, far)).toDF("doc_id", "text"))
-    val mem = MemoryStream[(Long, String)]
-    val sdf = mem.toDF().toDF("doc_id", "text")
-    val q = NearDupStream.probeStaticIndex(sdf, index)
-      .writeStream.format("memory").queryName("neardup_probe")
-      .outputMode("append").start()
-    try {
-      mem.addData((1L, near2),
-        (2L, "fresh content sharing nothing with any indexed document"))
-      q.processAllAvailable()
-      val hits = spark.table("neardup_probe")
-        .select("new_doc_id", "index_doc_id").distinct()
-        .as[(Long, Long)].collect().toSet
-      // the near-dup of indexed doc 100 collides; the fresh doc does not
-      assert(hits === Set((1L, 100L)))
-      // collisions equal the batch incremental probe's candidate set on
-      // the union corpus (bands are the identical xxhash64 spelling)
-      val batchCands = Dedup.lshCandidates(Dedup.minhashSignatures(
-          Seq((100L, near1), (200L, far), (1L, near2)).toDF("doc_id", "text")))
-        .as[(Long, Long)].collect().toSet
-      assert(batchCands.contains((1L, 100L)))
-      // stateless: the running query holds no state rows
-      assert(q.lastProgress == null ||
-        Option(q.lastProgress.stateOperators).forall(_.isEmpty))
     } finally q.stop()
   }
 }
