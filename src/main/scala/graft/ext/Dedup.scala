@@ -1051,7 +1051,7 @@ object Dedup {
   /** Bloom-filter decontamination geometry: m = 2¹⁶ bits, k = 3 hashes
     * (near-optimal k for the fixture's ~10⁴ eval shingles; FP rate
     * (1−e^(−kn/m))^k ≈ 2%). Positions come from the same affine
-    * md5-prefix family as [[slotHashPortable]], with its own constants —
+    * md5-prefix family as [[slotA]]/[[slotB]], with its own constants —
     * deterministic, literal-interpolated into the DuckDB twin.
     */
   val BloomBits = 65536
@@ -1254,41 +1254,21 @@ object Dedup {
     * multipliers so each map is a bijection mod 2^30). Computed once in
     * Scala and interpolated as LITERALS into the DuckDB twin — both
     * engines evaluate identical integer arithmetic.
+    *
+    * The oracle-checked MinHash path hashes each shingle with ONE md5
+    * (32-bit prefix, `CAST('0x' || substr(md5(s),1,8) AS BIGINT)` in
+    * DuckDB — RFC 1321, bit-identical), then derives the k slot hashes
+    * as `(A_j · h + B_j) mod 2^30` — integer arithmetic instead of k
+    * string hashes (the previous md5-per-slot form was ~7x the whole
+    * query). The xxhash64 path ([[minhashSignaturesNarrow]]) stays the
+    * throughput form; recall of this family vs exact ground truth is
+    * pinned in DedupSpec.
     */
   def slotA(j: Int): Long = ((2654435761L * (j + 1)) % SlotMod) | 1L
   def slotB(j: Int): Long = (40503L * (j + 7)) % SlotMod
 
-  /** Portable slot hashes for the oracle-checked MinHash path: ONE md5
-    * per shingle (32-bit prefix, `CAST('0x' || substr(md5(s),1,8) AS
-    * BIGINT)` in DuckDB — RFC 1321, bit-identical), then the k slot
-    * hashes as affine universal-hash transforms
-    * `(A_j · h + B_j) mod 2^30` — integer codegen instead of k string
-    * hashes (the previous md5-per-slot form was ~7x the whole query).
-    * The xxhash64 path ([[minhashSignaturesNarrow]]) stays the
-    * throughput form; recall of this family vs exact ground truth is
-    * pinned in DedupSpec.
-    */
-  def slotHashPortable(slot: Int, baseHash: Column): Column =
-    (baseHash * slotA(slot) + slotB(slot)) % SlotMod
-
   /** MinHash signatures over STRING shingles with the portable slot
-    * hashes: one md5 per shingle, k min-aggregates in one keyed pass
-    * (map-side partials), same k×bands geometry as the xxhash64 path.
-    */
-  def minhashSignaturesPortable(sh: DataFrame): DataFrame = {
-    val base = conv(substring(md5(col("shingle")), 1, 8), 16, 10)
-      .cast("long")
-    val sigCols = (0 until MinhashK).map { j =>
-      min(slotHashPortable(j, col("h"))).as(s"h$j")
-    }
-    sh.select(col("doc_id"), base.as("h"))
-      .groupBy("doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until MinhashK).map(j => col(s"h$j")): _*).as("sig"))
-  }
-
-  /** [[minhashSignaturesPortable]] as a NARROW projection over the
+    * hashes ([[slotA]], [[slotB]]), as a NARROW projection over the
     * per-doc shingle ARRAY (r20): the compiled
     * [[graft.functions.PortableMinHashSig]] kernel computes all k slot
     * minima in one pass — no explode, no md5-per-exploded-row, no
@@ -1435,7 +1415,7 @@ object Dedup {
     * O(batch), not O(corpus).
     *
     * All hashes ride the portable md5 family
-    * ([[minhashSignaturesPortable]]), candidates are verified with
+    * ([[minhashSignaturesPortableNarrow]]), candidates are verified with
     * exact Jaccard restricted to the candidate set, and a batch doc is
     * dropped iff it near-dups ANY indexed doc or a lower-id batch doc —
     * so the whole incremental pipeline is hash-verified end to end.
@@ -1522,8 +1502,7 @@ object Dedup {
     * narrow codegen'd [[graft.functions.SimHashFingerprint]] expression
     * — no explode, no shuffle (the former explode +
     * 32-conditional-sum aggregation re-shuffled every (doc, token)
-    * pair; [[simhashAgg]] keeps that form as the spec-pinned
-    * reference).
+    * pair; specs keep that form as the reference).
     */
   def simhash(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
@@ -1531,24 +1510,6 @@ object Dedup {
         transform(array_distinct(split(col("text"), " ")),
           t => tokenHash64(t)),
         SimhashBits).as("simhash"))
-
-  /** Aggregated SimHash reference implementation (see [[simhash]]). */
-  def simhashAgg(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("tok"))
-      .withColumn("h", tokenHash64(col("tok")))
-    val bitSums = (0 until SimhashBits).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(1) === 1, 1)
-        .otherwise(-1)).as(s"b$j")
-    }
-    val fp = (0 until SimhashBits)
-      .map(j => when(col(s"b$j") > 0, 1L << j).otherwise(0L))
-      .reduce(_ + _)
-    tok.groupBy("doc_id")
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), fp.as("simhash"))
-  }
 
   /** SimHash dedup summary: docs sharing an identical fingerprint. */
   def simhashGroups(docs: DataFrame): DataFrame =

@@ -317,14 +317,9 @@ object Graph {
     * [[NodeBroadcastMaxRows]] like every per-round LPA join), partial-
     * merging aggregates only, one scalar broadcast. Communities with no
     * intra edge keep a row via the left join (e_in = 0).
-    */
-  def modularityOfLabels(edgesIn: DataFrame,
-      labelsIn: DataFrame): DataFrame =
-    modularityOfLabelsOn(
-      graft.CheckpointLease.track(edgesIn.localCheckpoint()), labelsIn)
-
-  /** [[modularityOfLabels]]'s core over an ALREADY-MATERIALIZED edge
-    * list (three consumers: degrees, m2, the per-endpoint label joins).
+    *
+    * `edges` should be materialized: degrees, m2 and the per-endpoint
+    * label joins each consume it.
     */
   private[ext] def modularityOfLabelsOn(edges: DataFrame,
       labelsIn: DataFrame): DataFrame = {
@@ -358,7 +353,7 @@ object Graph {
 
   /** LPA communities + their modularity gate in one table: run
     * [[labelPropagation]], then score the labeling with
-    * [[modularityOfLabels]] — the same "real structure?" check near-dup
+    * [[modularityOfLabelsOn]] — the same "real structure?" check near-dup
     * clusters get, closing the loop for community detection. The LPA
     * labels are consumed three times downstream, but each round's label
     * table is already checkpointed inside [[labelPropagation]], so the
@@ -1300,7 +1295,7 @@ object Graph {
        |SELECT node AS part_node, label FROM l$rounds""".stripMargin
 
   /** LPA-modularity twin: the LPA round CTEs composed with the
-    * both-ways modularity arithmetic of [[modularityOfLabels]] — same
+    * both-ways modularity arithmetic of [[modularityOfLabelsOn]] — same
     * exact-integer inputs, same IEEE tree for share/q_contrib.
     */
   private def duckLpaModularitySql(rounds: Int = LpaRounds): String =

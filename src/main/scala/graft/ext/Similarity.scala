@@ -1990,14 +1990,13 @@ object Similarity {
     * preprocessing (Andoni et al. 2015; the "random rotation" baseline
     * of the OPQ literature): an exact orthogonal transform that SPREADS
     * anisotropic energy evenly across dimensions, so fixed-width PQ
-    * subspace slicing stops starving (the failure
-    * [[pqVarianceBalancedPerm]]'s snake deal also fixes, here without
-    * needing a variance pass). Everything is engine-portable by
-    * construction: H entries are ±1 (`(−1)^popcount(u AND j)`), D's
-    * signs come from bit 16 of the portable Knuth-hash u32 of the
-    * dimension index, the fold adds/subtracts the double-cast inputs
-    * SEQUENTIALLY, and √d = 8 is a power of two so the final scale is
-    * one exact division. No RNG state, no trig, no matrix literal.
+    * subspace slicing stops starving, without needing a variance pass.
+    * Everything is engine-portable by construction: H entries are ±1
+    * (`(−1)^popcount(u AND j)`), D's signs come from bit 16 of the
+    * portable Knuth-hash u32 of the dimension index, the fold
+    * adds/subtracts the double-cast inputs SEQUENTIALLY, and √d = 8 is a
+    * power of two so the final scale is one exact division. No RNG
+    * state, no trig, no matrix literal.
     *
     * Scale shape: one narrow map, d² adds per row, no shuffle.
     */
@@ -2022,7 +2021,7 @@ object Similarity {
     * this loop is the same doubles in the same order at JIT speed
     * (the [[graft.ext.Multimodal]] DCT precedent).
     */
-  private def hadamardRotateArray(x: Array[Float]): Array[Double] = {
+  private[ext] def hadamardRotateArray(x: Array[Float]): Array[Double] = {
     val d = HadamardDim
     val out = new Array[Double](d)
     var u = 0
@@ -2041,19 +2040,7 @@ object Similarity {
     out
   }
 
-  /** The rotated corpus `(vec_id, rotated array<double>)`. */
-  def hadamardRotate(emb: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .mapPartitions(_.map { case (id, e) =>
-        (id, hadamardRotateArray(e.toArray).toSeq)
-      })
-      .toDF("vec_id", "rotated")
-  }
-
-  /** SPECTRUM-FLATTENING REPORT of [[hadamardRotate]]: per-dimension
+  /** SPECTRUM-FLATTENING REPORT of the rotation: per-dimension
     * corpus energy (µ-quantized exact integer sums of x², the
     * [[gramMatrix]] trick) before vs after rotation — the evidence a
     * curator reads to decide whether the rotation is worth a reindex
@@ -2556,71 +2543,6 @@ object Similarity {
         expr("transform(embedding, v -> CAST(v / pq_n AS FLOAT))"))
       .drop("pq_n")
 
-  /** OPQ-lite basis: a VARIANCE-BALANCING dimension permutation — dims
-    * sorted by per-dimension variance (from the same integer
-    * gram+mean partials the eigensolve uses) and snake-dealt across
-    * the M subspaces, so no subspace hoards the high-variance
-    * coordinates. A permutation is the cheapest orthogonal transform
-    * in the OPQ family (Ge et al. 2013 §4's "natural" baseline —
-    * their eigenvalue-allocation preprocessing without the learned
-    * rotation): cosines are untouched, the plan-side cost is 64
-    * `getItem`s, and encode/decode need no matrix multiply at 100 TB.
-    *
-    * Measured on the fixtures (SimilaritySpec "OPQ-lite" test):
-    * recall@10 0.89 permuted vs 0.90 raw at the same 10-byte budget —
-    * the corpus is near-isotropic (per-dim variance is already flat),
-    * so balancing has nothing to balance and the production [[pqTopK]]
-    * path stays UNROTATED by default. On a SKEWED spectrum the win is
-    * now measured, not narrated (SimilaritySpec "SKEWED spectrum"
-    * test, 2000-vector synthetic with its energy in 8 leading dims):
-    * recall@10 1.00 permuted vs 0.83 raw at the same byte budget —
-    * raw slicing hands all signal to 2 of 16 subspaces while the
-    * snake deal gives every subspace one signal coordinate. That is
-    * the evidence for flipping the perm ON for anisotropic corpora;
-    * the registered-query default stays raw because the oracle twins
-    * pin the near-isotropic fixtures where it is neutral.
-    */
-  def pqVarianceBalancedPerm(emb: DataFrame,
-      m: Int = PqSubspaces): Seq[Int] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val partials = topComponentPartials(emb)
-      .as[(Long, Long, Long)].collect()
-    require(partials.nonEmpty, "empty corpus has no variance profile")
-    val d = partials.iterator.map(_._1).max.toInt + 1
-    // fixed-width subspace slicing downstream: with d % m != 0 the
-    // snake groups would have unequal sizes and the concatenation
-    // would quietly cut groups across subspace boundaries
-    require(d % m == 0,
-      s"subspace count $m must divide the dimension $d")
-    val n = partials.iterator.filter(_._1 == -1L).map(_._3).sum.toDouble
-    val micro = new Array[Long](d)
-    val diag = new Array[Long](d)
-    partials.foreach { case (i, j, v) =>
-      if (i >= 0L && j == -1L) micro(i.toInt) += v
-      else if (i >= 0L && i == j) diag(i.toInt) += v
-    }
-    val variance = Array.tabulate(d) { i =>
-      val mu = (micro(i) / n.toLong).toDouble / 1000000.0
-      diag(i).toDouble / (n * 100000000.0) - mu * mu
-    }
-    val ordered = (0 until d).sortBy(i => (-variance(i), i))
-    val groups = Array.fill(m)(Seq.newBuilder[Int])
-    ordered.zipWithIndex.foreach { case (dim, pos) =>
-      val round = pos / m
-      val slot = if (round % 2 == 0) pos % m else m - 1 - pos % m
-      groups(slot) += dim
-    }
-    groups.toSeq.flatMap(_.result())
-  }
-
-  /** Reorder the embedding coordinates by `perm` (a narrow projection
-    * of `getItem`s — the OPQ-lite change of basis).
-    */
-  def permuteDims(emb: DataFrame, perm: Seq[Int]): DataFrame =
-    emb.withColumn("embedding",
-      array(perm.map(p => col("embedding").getItem(p)): _*))
-
   /** Per-subspace PQ codebooks — ALL M subspaces trained JOINTLY: the
     * subvector stream (vec, sub) is exploded once and every Lloyd
     * iteration runs ONE assignment agg and ONE mean agg across all
@@ -2821,12 +2743,8 @@ object Similarity {
     * (SimilaritySpec gate ≥ 0.85 for box-to-box codebook stability).
     */
   def pqTopK(embRaw: DataFrame, k: Int = TopK,
-      shortlist: Int = PqShortlist,
-      perm: Option[Seq[Int]] = None): DataFrame = {
-    // optional OPQ-lite basis ([[pqVarianceBalancedPerm]]): train /
-    // encode / ADC in the permuted space; the exact re-rank below stays
-    // on the RAW vectors (a permutation is orthogonal — cosines agree)
-    val emb = perm.foldLeft(l2normalized(embRaw))(permuteDims)
+      shortlist: Int = PqShortlist): DataFrame = {
+    val emb = l2normalized(embRaw)
     val books = graft.CheckpointLease.track(
       trainPqCodebooks(emb).localCheckpoint(true))
     val codes = pqCodes(emb, books).select("vec_id", "sub_id", "code")

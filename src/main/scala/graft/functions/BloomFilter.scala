@@ -114,10 +114,11 @@ object Bloom {
 }
 
 /** `might_contain(filter, key)` as a native codegen'd expression: the
-  * filter literal deserializes ONCE (lazy, then rides the generated code
-  * as a referenced `long[]`), and each row costs two static xxhash64
-  * calls plus k bit probes — no allocation, no UDF boundary, stays inside
-  * whole-stage codegen in the fact table's scan stage.
+  * filter literal deserializes ONCE per expression instance (lazy), and
+  * each row costs two static xxhash64 calls plus k bit probes in
+  * [[mightContain]], which the generated code calls on the referenced
+  * expression — no allocation, no UDF boundary, stays inside whole-stage
+  * codegen in the fact table's scan stage.
   */
 case class BloomMightContain(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -141,34 +142,19 @@ case class BloomMightContain(left: Expression, right: Expression)
   @transient private lazy val (numHashes, words) =
     Bloom.deserialize(left.eval().asInstanceOf[Array[Byte]])
 
-  override protected def nullSafeEval(filter: Any, key: Any): Any =
-    Bloom.contains(words, words.length * 64, numHashes,
-      key.asInstanceOf[Long])
+  def mightContain(key: Long): Boolean =
+    Bloom.contains(words, words.length * 64, numHashes, key)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (_, key) => {
-      val wordsRef = ctx.addReferenceObj("bloomWords", words, "long[]")
-      val numBits = words.length * 64
-      val h1 = ctx.freshName("h1")
-      val h2 = ctx.freshName("h2")
-      val i = ctx.freshName("i")
-      val bit = ctx.freshName("bit")
-      val res = ctx.freshName("res")
-      s"""
-         |long $h1 = org.apache.spark.sql.catalyst.expressions.XXH64
-         |  .hashLong($key, ${Bloom.Seed1}L);
-         |long $h2 = org.apache.spark.sql.catalyst.expressions.XXH64
-         |  .hashLong($key, ${Bloom.Seed2}L);
-         |boolean $res = true;
-         |for (int $i = 0; $i < $numHashes; $i++) {
-         |  long $bit = (($h1 + $i * $h2) & Long.MAX_VALUE) % ${numBits}L;
-         |  if (($wordsRef[(int) ($bit >>> 6)] & (1L << $bit)) == 0L) {
-         |    $res = false; break;
-         |  }
-         |}
-         |${ev.value} = $res;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(filter: Any, key: Any): Any =
+    mightContain(key.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bloom", this,
+      classOf[BloomMightContain].getName)
+    nullSafeCodeGen(ctx, ev, (_, key) =>
+      s"${ev.value} = $ref.mightContain($key);")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomMightContain =

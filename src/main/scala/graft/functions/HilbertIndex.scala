@@ -15,18 +15,21 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * moves to a 4-adjacent cell (Morton jumps across the plane at quadrant
   * boundaries), so consecutive rows land in genuinely neighboring cells
   * and per-file min/max ranges come out tighter on both dimensions.
-  * Codegen'd so the per-row walk stays inside whole-stage codegen like
-  * the surrounding scale projection.
+  * The generated code calls the same [[index]] walk the interpreted path
+  * runs, so the per-row walk stays inside whole-stage codegen like the
+  * surrounding scale projection.
   */
 case class HilbertIndex(left: Expression, right: Expression, bits: Int)
     extends BinaryExpression {
+  // int inputs span at most 31 bits; bits = 0 would map every cell to 0
+  require(bits >= 1 && bits <= 31, s"hilbert bits must be in [1, 31]: $bits")
 
   // input contract: two int columns already scaled to [0, 2^bits)
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(xi: Any, yi: Any): Any = {
-    var x = xi.asInstanceOf[Int].toLong
-    var y = yi.asInstanceOf[Int].toLong
+  def index(xi: Int, yi: Int): Long = {
+    var x = xi.toLong
+    var y = yi.toLong
     var d = 0L
     var s = 1L << (bits - 1)
     while (s > 0) {
@@ -42,31 +45,15 @@ case class HilbertIndex(left: Expression, right: Expression, bits: Int)
     d
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xi, yi) => {
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val d = ctx.freshName("d")
-      val s = ctx.freshName("s")
-      val rx = ctx.freshName("rx")
-      val ry = ctx.freshName("ry")
-      val t = ctx.freshName("t")
-      s"""
-         |long $x = (long) $xi;
-         |long $y = (long) $yi;
-         |long $d = 0L;
-         |for (long $s = 1L << (${bits} - 1); $s > 0; $s >>= 1) {
-         |  long $rx = (($x & $s) > 0) ? 1L : 0L;
-         |  long $ry = (($y & $s) > 0) ? 1L : 0L;
-         |  $d += $s * $s * ((3L * $rx) ^ $ry);
-         |  if ($ry == 0L) {
-         |    if ($rx == 1L) { $x = $s - 1 - $x; $y = $s - 1 - $y; }
-         |    long $t = $x; $x = $y; $y = $t;
-         |  }
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(xi: Any, yi: Any): Any =
+    index(xi.asInstanceOf[Int], yi.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("hilbert", this,
+      classOf[HilbertIndex].getName)
+    nullSafeCodeGen(ctx, ev, (x, y) => s"${ev.value} = $ref.index($x, $y);")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HilbertIndex =

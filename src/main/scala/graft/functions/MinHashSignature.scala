@@ -18,23 +18,27 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * beat. As a codegen'd expression the whole signature stays NARROW — a
   * per-row projection with no explode and no shuffle — which is what the
   * streaming near-dup path requires and the batch path profits from.
+  * Both the interpreted and the generated path run [[sig]]; the slot
+  * seeds are computed once per expression instance, never per row.
   *
   * Slot hashes replicate Spark's `xxhash64(intLit(j), longCol(s))`
   * exactly: `XXH64.hashLong(s, XXH64.hashInt(j, 42))` (the builtin folds
   * children left-to-right from seed 42), so signatures are
-  * bit-identical to the aggregated form — NearDupStreamSpec pins that.
+  * bit-identical to the aggregated form — NearDupStreamSpec and
+  * KernelSpec pin that.
   */
 case class MinHashSignature(child: Expression, k: Int)
     extends UnaryExpression {
+  require(k >= 1, s"minhash needs at least one slot: k=$k")
 
   // input contract: array<long> (built over GraftBridge by
   // [[MinHashSignature.sig]], which the shingle pipeline types correctly)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private lazy val seeds: Array[Long] = MinHashSignature.slotSeeds(k)
+  @transient private lazy val seeds: Array[Long] =
+    MinHashSignature.slotSeeds(k)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def sig(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val out = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -51,31 +55,15 @@ case class MinHashSignature(child: Expression, k: Int)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val seedsRef = ctx.addReferenceObj("minhashSeeds", seeds, "long[]")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val h = ctx.freshName("h")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $out = new long[$k];
-         |java.util.Arrays.fill($out, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $s = $a.getLong($i);
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-         |      .hashLong($s, $seedsRef[$j]);
-         |    if ($h < $out[$j]) $out[$j] = $h;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override protected def nullSafeEval(input: Any): Any =
+    sig(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("minhash", this,
+      classOf[MinHashSignature].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.sig($a);")
+  }
 
   override protected def withNewChildInternal(
       newChild: Expression): MinHashSignature = copy(child = newChild)

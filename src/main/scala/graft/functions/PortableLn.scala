@@ -49,13 +49,4 @@ object PortableLn {
   /** The correction stage over a bound ladder column. */
   def correctionSql(y: String): String =
     s"($y - $y * $y / 2097152.0)"
-
-  /** JVM replay for specs: the same 22 ops through `Math.sqrt`. */
-  def replay(x: Double): Double = {
-    var v = x
-    var i = 0
-    while (i < 20) { v = math.sqrt(v); i += 1 }
-    val y = (v - 1.0) * 1048576.0
-    y - y * y / 2097152.0
-  }
 }

@@ -10,12 +10,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * array: slot j is `min over s of (A_j · h(s) + B_j) mod M` where
   * `h(s)` is the unsigned 32-bit md5 prefix — the
   * [[MinHashSignature]] device for the oracle-portable md5 hash family
-  * ([[graft.ext.Dedup.slotHashPortable]]).
+  * ([[graft.ext.Dedup.slotA]]).
   *
   * == What it replaces (r20) ==
-  * `minhashSignaturesPortable` aggregated the EXPLODED shingle stream:
-  * one md5 per (doc, shingle) row, then a `groupBy(doc_id)` with k=32
-  * min-aggregates — a full exchange of the corpus' shingle stream per
+  * The aggregated form (now only the specs' reference) ran over the
+  * EXPLODED shingle stream: one md5 per (doc, shingle) row, then a
+  * `groupBy(doc_id)` with k=32 min-aggregates — a full exchange of the corpus' shingle stream per
   * consumer (dedup_minhash_md5, dedup_source_matrix, dedup_incremental,
   * dedup_lsh_eval). This expression computes all k minima in one
   * compiled pass over the doc's own shingle array: per-row projection,
@@ -83,7 +83,7 @@ object PortableMinHash {
 
   /** Signature column over `array<string>` shingles; `as`/`bs`/`mod`
     * are the affine slot-hash constants (see
-    * [[graft.ext.Dedup.slotHashPortable]]).
+    * [[graft.ext.Dedup.slotA]]).
     */
   def sig(shArr: Column, as: Array[Long], bs: Array[Long],
       mod: Long): Column =

@@ -128,9 +128,6 @@ case class PqNearestCentroids(child: Expression, books: Array[Float],
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    // reference the expression object and call its compiled loop — the
-    // kernel's speed is the hand-written assign(), not expression-tree
-    // codegen (the DotProductFF precedent, minus per-node glue)
     val ref = ctx.addReferenceObj("pqAssign", this,
       classOf[PqNearestCentroids].getName)
     nullSafeCodeGen(ctx, ev, a =>

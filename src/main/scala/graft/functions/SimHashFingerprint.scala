@@ -19,16 +19,18 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * the simhash queries carry a DuckDB oracle instead of a rows-only
   * check (xxhash64, the previous choice, exists only in Spark).
   * Fingerprints are bit-identical to the aggregated form over the same
-  * hashes (DedupSpec pins that).
+  * hashes (DedupSpec and KernelSpec pin that). Both the interpreted and
+  * the generated path run [[fold]].
   */
 case class SimHashFingerprint(child: Expression, bits: Int)
     extends UnaryExpression {
+  // bit j is set with `1L << j`, which wraps past bit 63
+  require(bits >= 1 && bits <= 64, s"simhash bits must be in [1, 64]: $bits")
 
   // input contract: array<long> of (distinct) token hashes
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def fold(arr: ArrayData): Long = {
     val n = arr.numElements()
     val counts = new Array[Int](bits)
     var i = 0
@@ -50,30 +52,15 @@ case class SimHashFingerprint(child: Expression, bits: Int)
     fp
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val fp = ctx.freshName("fp")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $counts = new int[$bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $j = 0; $j < $bits; $j++) {
-         |    if ((($h >>> $j) & 1L) == 1L) $counts[$j]++; else $counts[$j]--;
-         |  }
-         |}
-         |long $fp = 0L;
-         |for (int $j = 0; $j < $bits; $j++) {
-         |  if ($counts[$j] > 0) $fp |= 1L << $j;
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(input: Any): Any =
+    fold(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("simhash", this,
+      classOf[SimHashFingerprint].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.fold($a);")
+  }
 
   override protected def withNewChildInternal(
       newChild: Expression): SimHashFingerprint = copy(child = newChild)

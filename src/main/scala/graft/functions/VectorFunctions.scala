@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * The higher-order-function form (`aggregate(zip_with(...))`) allocates a
   * lambda frame per element and stays outside whole-stage codegen's fast
   * path; at 4M pairs × 64 dims (sim_knn_graph at sf0.1) that interpreted
-  * overhead dominated the query (~90 s). This expression generates a tight
-  * primitive loop instead — same sequential `(double)a[i] * (double)b[i]`
+  * overhead dominated the query (~90 s). This expression runs one
+  * primitive loop, [[dot]], which both the interpreted and the generated
+  * path call — same sequential `(double)a[i] * (double)b[i]`
   * accumulation, so results stay bit-identical to the HOF form and the
   * DuckDB oracle's `list_sum` comprehension (the SparkEntry determinism
   * contract).
@@ -22,40 +23,33 @@ case class DotProductFF(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val aa = a.asInstanceOf[ArrayData]
-    val bb = b.asInstanceOf[ArrayData]
-    val n = math.min(aa.numElements(), bb.numElements())
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
     var sum = 0.0
     var i = 0
     while (i < n) {
-      sum += aa.getFloat(i).toDouble * bb.getFloat(i).toDouble
+      sum += a.getFloat(i).toDouble * b.getFloat(i).toDouble
       i += 1
     }
     sum
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $sum += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dotFF", this,
+      classOf[DotProductFF].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.dot($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductFF =
     copy(left = newLeft, right = newRight)
 }
 
-/** [[DotProductFF]]'s `array<double>` sibling — same tight sequential
+/** [[DotProductFF]]'s `array<double>` sibling — same sequential [[dot]]
   * loop, for vectors that are already double-typed (e.g. the centered /
   * projected embeddings an All-but-the-Top transform produces, where a
   * float round-trip would destroy the fixed IEEE DAG the oracle
@@ -66,33 +60,26 @@ case class DotProductDD(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val aa = a.asInstanceOf[ArrayData]
-    val bb = b.asInstanceOf[ArrayData]
-    val n = math.min(aa.numElements(), bb.numElements())
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
     var sum = 0.0
     var i = 0
     while (i < n) {
-      sum += aa.getDouble(i) * bb.getDouble(i)
+      sum += a.getDouble(i) * b.getDouble(i)
       i += 1
     }
     sum
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $sum += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dotDD", this,
+      classOf[DotProductDD].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.dot($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductDD =

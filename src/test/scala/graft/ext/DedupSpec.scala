@@ -133,7 +133,7 @@ class DedupSpec extends SparkSpec {
     val d = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val exact = Dedup.ngramJaccardPairs(d, 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val cands = Dedup.lshCandidates(MinHashOracle.minhashSignatures(d))
+    val cands = Dedup.lshCandidates(DedupOracle.minhashSignatures(d))
       .as[(Long, Long)].collect().toSet
     val missed = exact -- cands
     assert(missed.isEmpty, s"LSH missed ${missed.size} of ${exact.size} true pairs")
@@ -150,7 +150,7 @@ class DedupSpec extends SparkSpec {
     val exact = Dedup.ngramJaccardPairs(d, 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val cands = Dedup.lshCandidatesPortable(
-        Dedup.minhashSignaturesPortable(Dedup.shingles(d)))
+        DedupOracle.minhashSignaturesPortable(Dedup.shingles(d)))
       .as[(Long, Long)].collect().toSet
     val missed = exact -- cands
     assert(missed.isEmpty,
@@ -169,7 +169,7 @@ class DedupSpec extends SparkSpec {
     val truth = Dedup.ngramJaccardPairs(d, 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val cands = Dedup.lshCandidatesPortable(
-        Dedup.minhashSignaturesPortable(Dedup.shingles(d)))
+        DedupOracle.minhashSignaturesPortable(Dedup.shingles(d)))
       .as[(Long, Long)].collect().toSet
     graft.CheckpointLease.releaseAll()
     val r = Dedup.lshEval(d).collect().head
@@ -200,7 +200,7 @@ class DedupSpec extends SparkSpec {
   test("narrow simhash equals the aggregated reference bit-for-bit") {
     val d = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val narrow = Dedup.simhash(d).as[(Long, Long)].collect().toMap
-    val agg = Dedup.simhashAgg(d).as[(Long, Long)].collect().toMap
+    val agg = DedupOracle.simhashAgg(d).as[(Long, Long)].collect().toMap
     assert(narrow === agg)
   }
 
@@ -210,7 +210,7 @@ class DedupSpec extends SparkSpec {
     val narrow = Dedup.minhashSignaturesPortableNarrow(
         Dedup.shingleStrArrays(d))
       .as[(Long, Seq[Long])].collect().toMap
-    val agg = Dedup.minhashSignaturesPortable(Dedup.shingles(d))
+    val agg = DedupOracle.minhashSignaturesPortable(Dedup.shingles(d))
       .as[(Long, Seq[Long])].collect().toMap
     assert(narrow === agg)
     assert(narrow.nonEmpty)

@@ -354,7 +354,7 @@ class GraphSpec extends SparkSpec {
     // a community-blind parity relabel must score strictly worse
     val parity = edges.select(col("src").as("node")).distinct()
       .withColumn("cluster_id", col("node") % 2)
-    val qParity = Graph.modularityOfLabels(edges, parity)
+    val qParity = Graph.modularityOfLabelsOn(edges, parity)
       .collect().map(_.getAs[Double]("q_contrib")).sum
     assert(qLpa > 0 && qParity < 0 && qLpa > qParity)
     // one round (ties to the smallest label): 1 -> 2, 2 -> 1, 3 -> 1,
@@ -372,7 +372,7 @@ class GraphSpec extends SparkSpec {
     val lone = edges.select(col("src").as("node")).distinct()
       .withColumn("cluster_id",
         when(col("node") === 1L, lit(99L)).otherwise(lit(0L)))
-    val eIn = Graph.modularityOfLabels(edges, lone).collect()
+    val eIn = Graph.modularityOfLabelsOn(edges, lone).collect()
       .map(r => r.getAs[Long]("cluster_id") -> r.getAs[Long]("e_in")).toMap
     assert(eIn(99L) === 0L)
     graft.CheckpointLease.releaseAll()

@@ -9,6 +9,15 @@ class SimilaritySpec extends SparkSpec {
     rows.map { case (id, v) => (id, v, 0) }
       .toDF("vec_id", "embedding", "label")
 
+  /** The rotated corpus `(vec_id, rotated array<double>)` through the
+    * rotation kernel `vec_rotate_hadamard` reports on.
+    */
+  private def hadamardRotate(e: org.apache.spark.sql.DataFrame) =
+    e.select("vec_id", "embedding").as[(Long, Seq[Float])]
+      .map { case (id, v) =>
+        (id, Similarity.hadamardRotateArray(v.toArray)) }
+      .toDF("vec_id", "rotated")
+
   test("gramMatrix: exact quantized outer-product sums, partition-invariant") {
     // q1 = [10000, 20000], q2 = [5000, -2500] (all exact in float)
     val d = emb(1L -> Seq(1.0f, 2.0f), 2L -> Seq(0.5f, -0.25f))
@@ -330,92 +339,6 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double)].collect()
       .foreach { case (q, n, c) =>
         bc.get((q, n)).foreach(exact => assert(exact === c)) }
-  }
-
-  test("OPQ-lite: variance-balanced permutation is a true permutation; " +
-      "recall delta vs the raw basis reported at the same byte budget") {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val perm = Similarity.pqVarianceBalancedPerm(emb)
-    assert(perm.sorted === (0 until Similarity.SrpDim),
-      "not a permutation of the dimension set")
-    // snake deal: the top-variance dim and the (2m)th must land in the
-    // same subspace only if the deal wrapped — structural sanity via
-    // group sizes: every subspace gets exactly subDim coordinates
-    assert(perm.length === Similarity.SrpDim)
-    val brute = Similarity.bruteForceTopK(emb)
-      .select("query_id", "neighbor_id")
-      .as[(Long, Long)].collect().toSet
-    def recallOf(p: Option[Seq[Int]]): Double = {
-      val got = Similarity.pqTopK(emb, perm = p)
-        .select("query_id", "neighbor_id")
-        .as[(Long, Long)].collect().toSet
-      (brute & got).size.toDouble / brute.size
-    }
-    val raw = recallOf(None)
-    val opq = recallOf(Some(perm))
-    info(f"PQ recall@10: raw basis $raw%.2f, OPQ-lite permuted $opq%.2f " +
-      f"(delta ${opq - raw}%+.2f)")
-    // the fixtures are near-isotropic, so the permutation is expected
-    // to be ~neutral here; the gate only requires it not to WRECK the
-    // index — the production path stays raw-basis per the scaladoc
-    assert(opq >= 0.80, f"OPQ-lite recall $opq%.2f collapsed")
-  }
-
-  test("OPQ-lite on a SKEWED spectrum: variance balancing wins — the " +
-      "measured upgrade the near-isotropic fixtures cannot show") {
-    import spark.implicits._
-    val d = Similarity.SrpDim
-    val m = Similarity.PqSubspaces
-    def mix(x0: Long): Long = {
-      var x = x0
-      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-      x ^ (x >>> 31)
-    }
-    def u(s: Long): Double = ((mix(s) >>> 40) % 2000L - 1000L) / 1000.0
-    // skewed spectrum: 8 contiguous high-variance dims, the rest near
-    // zero — the common real-embedding shape (energy concentrated in a
-    // few leading directions). Raw fixed-width slicing hands ALL the
-    // signal to 2 of the 16 subspaces (8 bits for the whole problem);
-    // the variance-balanced snake deal gives every subspace one signal
-    // dim (a full byte each).
-    // 2000 vectors: deep enough that the 50-deep exact re-rank cannot
-    // paper over a bad ADC ranking (at 300 the shortlist covered the
-    // true top-10 under ANY quantization and both arms scored 1.0)
-    val vecs = (0 until 2000).map { v =>
-      val arr = Array.tabulate(d) { j =>
-        val std = if (j < 8) 1.0 else 0.02
-        (u(v * 131L + j * 7919L + 17L) * std).toFloat
-      }
-      (v.toLong, arr.toSeq)
-    }
-    val emb = vecs.toDF("vec_id", "embedding")
-    val perm = Similarity.pqVarianceBalancedPerm(emb)
-    assert(perm.sorted === (0 until d), "not a permutation")
-    // the deal spreads the top-8 dims one-per-subspace
-    val bySub = perm.grouped(d / m).toSeq
-    assert(bySub.forall(_.count(_ < 8) <= 1),
-      s"high-variance dims still clustered: $bySub")
-    val brute = Similarity.bruteForceTopK(emb)
-      .select("query_id", "neighbor_id")
-      .as[(Long, Long)].collect().toSet
-    def recallOf(p: Option[Seq[Int]]): Double = {
-      val got = Similarity.pqTopK(emb, perm = p)
-        .select("query_id", "neighbor_id")
-        .as[(Long, Long)].collect().toSet
-      (brute & got).size.toDouble / brute.size
-    }
-    val raw = recallOf(None)
-    val opq = recallOf(Some(perm))
-    info(f"skewed-spectrum PQ recall@10: raw $raw%.2f, " +
-      f"OPQ-lite $opq%.2f (delta ${opq - raw}%+.2f)")
-    // the win that justifies flipping the perm ON for anisotropic
-    // corpora (the production default stays raw: the real fixtures are
-    // near-isotropic and the oracle twins pin that path)
-    assert(opq > raw,
-      f"variance balancing must win on a skewed spectrum ($opq%.2f " +
-        f"vs $raw%.2f)")
   }
 
   test("semDedup: drop set matches brute-force recomputation, cluster " +
@@ -1197,7 +1120,7 @@ class SimilaritySpec extends SparkSpec {
     // basis witness: H.D.e0 / 8 is the constant vector s0/8 (H column 0
     // is all +1), so every output entry is identical with |v| = 0.125
     val e0 = emb(1L -> (Seq(1.0f) ++ Seq.fill(63)(0.0f)))
-    val r0 = Similarity.hadamardRotate(e0).collect().head
+    val r0 = hadamardRotate(e0).collect().head
       .getSeq[Double](1)
     assert(r0.length === 64 && r0.distinct.length === 1 &&
       math.abs(r0.head) === 0.125, s"basis rotation wrong: ${r0.take(4)}")
@@ -1243,7 +1166,7 @@ class SimilaritySpec extends SparkSpec {
       (brute & got).size.toDouble / brute.size
     }
     val raw = recallOf(embSkew)
-    val rotatedF = Similarity.hadamardRotate(embSkew)
+    val rotatedF = hadamardRotate(embSkew)
       .select(col("vec_id"),
         expr("transform(rotated, x -> CAST(x AS FLOAT))").as("embedding"))
     val rot = recallOf(rotatedF)

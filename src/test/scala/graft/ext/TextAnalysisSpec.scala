@@ -190,7 +190,7 @@ class TextAnalysisSpec extends SparkSpec {
     assert(r(0)._2 === 2L && r(1)._2 === 1L)
     assert(math.abs(r(0)._3) < 1e-9 && r(1)._3 < 0)
     // bit-exact replay: term-ascending sum of pln(idf_ratio) * tf_norm
-    import graft.functions.PortableLn.replay
+    import graft.functions.PortableLnSpec.replay
     val d1 = (0.0 + replay(0.6) * 1.0) + replay(2.5 / 1.5) * 1.0
     assert(r(0)._3 === d1)
     // operand-for-operand: the engine computes tf*2.2, not the folded 6.6

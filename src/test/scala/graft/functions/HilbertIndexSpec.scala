@@ -24,18 +24,4 @@ class HilbertIndexSpec extends SparkSpec {
         s"jump between ($x1,$y1) and ($x2,$y2)")
     }
   }
-
-  test("interpreted eval agrees with codegen") {
-    // project through a filter barrier to exercise both paths at 16 bits
-    val pts = Seq((0, 0), (65535, 65535), (12345, 54321), (1, 65534))
-    val viaSpark = pts.toDF("x", "y")
-      .select(HilbertIndex.index(col("x"), col("y"), 16).as("d"))
-      .as[Long].collect().toSeq
-    val direct = pts.map { case (x, y) =>
-      import org.apache.spark.sql.catalyst.expressions.Literal
-      HilbertIndex(Literal(x), Literal(y), 16).eval(null)
-        .asInstanceOf[Long]
-    }
-    assert(viaSpark === direct)
-  }
 }

@@ -39,4 +39,32 @@ class KernelBoundsSpec extends AnyFunSuite {
       agg.merge(full, agg.reduce(agg.zero, Array(7L))))
     assert(e.getMessage.contains("capped posting buffer needs"))
   }
+
+  test("MinHashSignature needs at least one slot") {
+    val e = intercept[IllegalArgumentException](MinHashSignature(null, 0))
+    assert(e.getMessage.contains("at least one slot: k=0"))
+    assert(MinHashSignature(null, 1).k === 1)
+  }
+
+  test("SimHashFingerprint bits stay within one long") {
+    Seq(0, 65, -1).foreach { b =>
+      val e = intercept[IllegalArgumentException](SimHashFingerprint(null, b))
+      assert(e.getMessage.contains(s"simhash bits must be in [1, 64]: $b"))
+    }
+    // bit 63 is the sign bit: every hash has it set, so it must be kept
+    val all = new GenericArrayData(Array[Any](-1L))
+    assert(SimHashFingerprint(null, 64).fold(all) === -1L)
+    assert(SimHashFingerprint(null, 1).fold(all) === 1L)
+  }
+
+  test("HilbertIndex bits stay within the int inputs") {
+    Seq(0, 32, -1).foreach { b =>
+      val e = intercept[IllegalArgumentException](HilbertIndex(null, null, b))
+      assert(e.getMessage.contains(s"hilbert bits must be in [1, 31]: $b"))
+    }
+    // the far corner of the largest grid: (2^31 - 1, 0) is the last cell
+    val max = HilbertIndex(null, null, 31)
+    assert(max.index(Int.MaxValue, 0) === (1L << 62) - 1)
+    assert(HilbertIndex(null, null, 1).index(1, 0) === 3L)
+  }
 }

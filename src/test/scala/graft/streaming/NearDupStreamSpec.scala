@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ext.{Dedup, MinHashOracle}
+import graft.ext.{Dedup, DedupOracle}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class NearDupStreamSpec extends SparkSpec {
@@ -28,7 +28,7 @@ class NearDupStreamSpec extends SparkSpec {
       val streamed = spark.table("neardup_out")
         .select("doc_a", "doc_b").distinct()
         .as[(Long, Long)].collect().toSet
-      val batch = Dedup.lshCandidates(MinHashOracle.minhashSignatures(
+      val batch = Dedup.lshCandidates(DedupOracle.minhashSignatures(
           Seq((1L, near1), (2L, near2), (3L, far)).toDF("doc_id", "text")))
         .as[(Long, Long)].collect().toSet
       assert(streamed === batch)
@@ -40,7 +40,7 @@ class NearDupStreamSpec extends SparkSpec {
   test("narrow signatures equal the aggregated signatures") {
     val docs = Seq((1L, near1), (2L, near2), (3L, far), (4L, "too short"))
       .toDF("doc_id", "text")
-    val agg = MinHashOracle.minhashSignatures(docs)
+    val agg = DedupOracle.minhashSignatures(docs)
       .as[(Long, Seq[Long])].collect().toMap
     val narrow = Dedup.minhashSignaturesNarrow(docs)
       .as[(Long, Seq[Long])].collect().toMap
