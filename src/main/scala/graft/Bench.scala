@@ -71,10 +71,11 @@ object Bench {
     spark
   }
 
-  /** Session hygiene between queries: release leased checkpoints and any
-    * cached plans so one query's storage can never be charged to another
-    * (round-2 post-mortem: leaked checkpoint blocks inflated an unrelated
-    * query 7x in the recorded bench).
+  /** Session hygiene between queries: unpersist every checkpoint and
+    * cache ([[CheckpointLease.releaseAll]]) and drop the cached plans, so
+    * one query's storage can never be charged to another (round-2
+    * post-mortem: leaked checkpoint blocks inflated an unrelated query 7x
+    * in the recorded bench).
     */
   def reset(spark: SparkSession): Unit = {
     CheckpointLease.releaseAll()

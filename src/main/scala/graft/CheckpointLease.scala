@@ -1,44 +1,42 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.SparkSession
 
-/** Registry for eagerly `localCheckpoint()`ed DataFrames whose block-manager
-  * storage must outlive the builder that created them but NOT the session.
+/** The one release of every persistent RDD between queries.
   *
-  * Several operators (minhash verify pairs, the recursive-CTE label set)
-  * eagerly checkpoint a small intermediate so a large upstream cache can be
-  * released before the query function returns. The checkpointed blocks
-  * themselves, however, are only reachable through the returned plan's
-  * `LogicalRDD`, which `Dataset.unpersist` never touches — in a long-lived
-  * session (the bench runs 78 queries twice in one JVM) those blocks
-  * accumulate and their memory/GC pressure gets charged to whichever query
-  * shuffles hardest next (diagnosed in round 2 as a 7x phantom regression).
+  * Builders materialize intermediates with a plain `localCheckpoint(eager)`
+  * (or `persist()`); either way the blocks belong to a persistent RDD of
+  * the session's SparkContext. A checkpoint is reachable only through its
+  * frame's `LogicalRDD`, which `Dataset.unpersist` and `clearCache` never
+  * touch, so in a long-lived session (the bench runs every query many
+  * times in one JVM) its blocks stay stored until a GC lets ContextCleaner
+  * drop them, and their memory/GC pressure is charged to whichever query
+  * shuffles hardest next (round 2 diagnosed a 7x phantom regression this
+  * way). [[releaseAll]] unpersists all of them, caches and local
+  * checkpoints alike.
   *
   * == Contract ==
-  * One JVM-wide lease list, released by sequential harnesses: Bench,
-  * TimeQuery, Verify (through [[Bench.reset]]) and the benchmark call
-  * [[releaseAll]] after each query's consuming action, and run one query
-  * at a time. A caller that runs queries concurrently in one JVM must not
-  * call [[releaseAll]] while another query's tracked frame is still to be
-  * acted on: it releases every lease, not only its own.
+  * Sequential harnesses (Bench, TimeQuery and Verify through
+  * [[Bench.reset]], and the benchmark's pass loop) call [[releaseAll]]
+  * after each query's consuming action and run one query at a time (a
+  * call while another query is still in flight breaks that query). A
+  * frame built before the call must not be acted on after it: a
+  * checkpoint's blocks go with the lineage that could rebuild them, so a
+  * harness that re-runs a query rebuilds it from its `SparkEntry.queries`
+  * function. Iterative builders that free superseded rounds within one
+  * query do so themselves with `GraftBridge.unpersistLocalCheckpoint`.
   *
-  * Releasing unpins the blocks of a lineage-truncated plan, so a tracked
-  * frame must not be acted on again after it is released — harnesses
-  * that re-run a query rebuild it from its `SparkEntry.queries` function,
-  * which re-checkpoints.
+  * The name is historical: builders used to register ("lease") each
+  * checkpoint in a list here, which released a subset of what the
+  * session-wide release covers. The list is gone; the name stays because
+  * the benchmark harness imports it.
   */
 object CheckpointLease {
 
-  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Register a checkpointed frame; returns it. */
-  def track(df: DataFrame): DataFrame = synchronized { tracked += df; df }
-
-  /** Release the blocks behind every tracked frame (idempotent;
-    * sequential-harness reset between queries). */
-  def releaseAll(): Unit = synchronized {
-    tracked.foreach(GraftBridge.unpersistLocalCheckpoint)
-    tracked.clear()
-  }
+  /** Unpersist every persistent RDD of the active session (blocks are
+    * freed asynchronously); a no-op when no session exists. */
+  def releaseAll(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(_.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false)))
 }

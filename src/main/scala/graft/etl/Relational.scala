@@ -148,9 +148,9 @@ object Relational {
     // and the merged-union estimate consume it — un-materialized, the
     // full sketch aggregation ran twice.
     val keyed = li.select(col("l_returnflag"), col("l_orderkey"))
-    val sk = graft.CheckpointLease.track(keyed.groupBy("l_returnflag")
+    val sk = keyed.groupBy("l_returnflag")
       .agg(hll_sketch_agg(col("l_orderkey")).as("sk"))
-      .localCheckpoint())
+      .localCheckpoint()
     val exact = keyed.groupBy("l_returnflag")
       .agg(countDistinct("l_orderkey").as("exact_orders"))
     val merged = sk.agg(
@@ -700,12 +700,11 @@ object Relational {
     */
   def topSupplier(supp: DataFrame, li: DataFrame): DataFrame = {
     val lo = lit(Q15Start).cast("timestamp")
-    val rev = graft.CheckpointLease.track(
-      li.filter(col("l_shipdate") >= lo &&
-          col("l_shipdate") < add_months(lo, 3))
-        .groupBy(col("l_suppkey"))
-        .agg(revenueE4Sum.as("total_revenue_e4"))
-        .localCheckpoint())
+    val rev = li.filter(col("l_shipdate") >= lo &&
+        col("l_shipdate") < add_months(lo, 3))
+      .groupBy(col("l_suppkey"))
+      .agg(revenueE4Sum.as("total_revenue_e4"))
+      .localCheckpoint()
     val mx = rev.agg(max("total_revenue_e4").as("max_rev_e4"))
     val winners = rev.join(broadcast(mx),
       col("total_revenue_e4") === col("max_rev_e4"))
@@ -824,11 +823,11 @@ object Relational {
   def modalQuantity(li: DataFrame): DataFrame = {
     // materialized once: feeds both the argmax window and the totals —
     // without this the fact scan + aggregate run twice
-    val counts = graft.CheckpointLease.track(li
+    val counts = li
       .groupBy(col("l_returnflag"), round(col("l_quantity")).cast("long")
         .as("qty"))
       .agg(count(lit(1)).as("n_at_mode"))
-      .localCheckpoint())
+      .localCheckpoint()
     val w = Window.partitionBy("l_returnflag")
       .orderBy(col("n_at_mode").desc, col("qty"))
     val totals = counts.groupBy("l_returnflag")
@@ -1302,7 +1301,6 @@ object Relational {
       spark.catalog.dropTempView("rec_und_v")
       spark.catalog.dropTempView("rec_lbl_v")
     }
-    graft.CheckpointLease.track(labels)
     phase("return")
     lastRecursionPhases = phases.toMap
     labels.filter(col("node").isNotNull)

@@ -213,13 +213,12 @@ object TimeSeries {
   def markovSteadyState(ev: DataFrame,
       iters: Int = MarkovIters): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("event_id")
-    val counts = graft.CheckpointLease.track(
-      ev.select(col("user_id"), col("event_id"), col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy("prev_type", "event_type")
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint())
+    val counts = ev.select(col("user_id"), col("event_id"), col("event_type"))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+      .filter(col("prev_type").isNotNull)
+      .groupBy("prev_type", "event_type")
+      .agg(count(lit(1)).as("c"))
+      .localCheckpoint()
     val totals = counts.groupBy("prev_type").agg(sum("c").as("r"))
     val p = counts.join(broadcast(totals), Seq("prev_type"))
       .select(col("prev_type"), col("event_type").as("next_type"),
@@ -304,12 +303,11 @@ object TimeSeries {
     // both materialized once: wk feeds the cohort aggregate AND the
     // cells join; cohorts feeds the sizes aggregate AND the join —
     // without this the orders scan runs three times
-    val wk = graft.CheckpointLease.track(ord.select(col("o_custkey"),
+    val wk = ord.select(col("o_custkey"),
       date_trunc("week", col("o_orderdate")).cast("date").as("week"),
-      cents("o_totalprice").as("rev_cents")).localCheckpoint())
-    val cohorts = graft.CheckpointLease.track(
-      wk.groupBy("o_custkey").agg(min("week").as("cohort_week"))
-        .localCheckpoint())
+      cents("o_totalprice").as("rev_cents")).localCheckpoint()
+    val cohorts = wk.groupBy("o_custkey").agg(min("week").as("cohort_week"))
+      .localCheckpoint()
     val sizes = cohorts.groupBy("cohort_week")
       .agg(count(lit(1)).as("n_customers"))
     val cells = wk.join(cohorts, Seq("o_custkey"))
@@ -388,7 +386,7 @@ object TimeSeries {
         cents("value").as("v_cents"))
       .groupBy("user_id", "day")
       .agg(max_by(col("v_cents"), col("ord")).as("v_obs"))
-    val dailyM = graft.CheckpointLease.track(daily.localCheckpoint())
+    val dailyM = daily.localCheckpoint()
     val cal = dailyM.groupBy("user_id")
       .agg(min("day").as("d0"), max("day").as("d1"))
       .select(col("user_id"),
@@ -425,7 +423,7 @@ object TimeSeries {
         cents("value").as("v_cents"))
       .groupBy("user_id", "day")
       .agg(max_by(col("v_cents"), col("ord")).as("v_obs"))
-    val dailyM = graft.CheckpointLease.track(daily.localCheckpoint())
+    val dailyM = daily.localCheckpoint()
     val cal = dailyM.groupBy("user_id")
       .agg(min("day").as("d0"), max("day").as("d1"))
       .select(col("user_id"),
@@ -462,10 +460,9 @@ object TimeSeries {
     * shuffles the day key once.
     */
   def newVsReturning(ev: DataFrame): DataFrame = {
-    val ud = graft.CheckpointLease.track(
-      ev.select(col("user_id"), to_date(col("ts")).as("day"))
-        .distinct()
-        .localCheckpoint()) // feeds the first-day aggregate AND the join
+    val ud = ev.select(col("user_id"), to_date(col("ts")).as("day"))
+      .distinct()
+      .localCheckpoint() // feeds the first-day aggregate AND the join
     val first = ud.groupBy("user_id").agg(min("day").as("first_day"))
     ud.join(first, Seq("user_id"))
       .groupBy("day")
@@ -511,10 +508,9 @@ object TimeSeries {
   }
 
   def activeUsers(ev: DataFrame): DataFrame = {
-    val ud = graft.CheckpointLease.track(
-      ev.select(col("user_id"), to_date(col("ts")).as("day"))
-        .distinct()
-        .localCheckpoint()) // feeds both the DAU and the coverage branch
+    val ud = ev.select(col("user_id"), to_date(col("ts")).as("day"))
+      .distinct()
+      .localCheckpoint() // feeds both the DAU and the coverage branch
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     val wau = ud
       .select(col("user_id"),
@@ -607,10 +603,10 @@ object TimeSeries {
   }
 
   def robustAnomalies(ord: DataFrame): DataFrame = {
-    val daily = graft.CheckpointLease.track(
+    val daily =
       ord.groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
         .agg(sum(cents("o_totalprice")).as("rev_cents"))
-        .localCheckpoint()) // feeds the median pass AND the rejoin
+        .localCheckpoint() // feeds the median pass AND the rejoin
     val med = daily.agg(expr("percentile(rev_cents * 2, 0.5)").as("med2"))
     val withDev = daily.crossJoin(broadcast(med))
       .withColumn("adev2", abs(col("rev_cents").cast("double") * 2 -
@@ -639,10 +635,9 @@ object TimeSeries {
     * (metadata-sized at any SF).
     */
   def thresholdEpisodes(ord: DataFrame): DataFrame = {
-    val daily = graft.CheckpointLease.track(
-      ord.groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(cents("o_totalprice")).as("rev_cents"))
-        .localCheckpoint()) // feeds the total AND the island walk
+    val daily = ord.groupBy(col("o_orderdate").cast("date").as("day"))
+      .agg(sum(cents("o_totalprice")).as("rev_cents"))
+      .localCheckpoint() // feeds the total AND the island walk
     val tot = daily.agg(count(lit(1)).as("n_days"),
       sum("rev_cents").as("total_cents"))
     val above = daily.crossJoin(broadcast(tot))
@@ -675,10 +670,10 @@ object TimeSeries {
     * multi-century corpus would reuse its banded split).
     */
   def cusumDailyRevenue(ord: DataFrame): DataFrame = {
-    val daily = graft.CheckpointLease.track(
+    val daily =
       ord.groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
         .agg(sum(cents("o_totalprice")).as("rev_cents"))
-        .localCheckpoint()) // feeds the totals AND the cumulative
+        .localCheckpoint() // feeds the totals AND the cumulative
     val totals = daily.agg(count(lit(1)).as("n_days"),
       sum("rev_cents").as("total_cents"))
     val wCum = Window.orderBy("day")
@@ -895,10 +890,9 @@ object TimeSeries {
     * day domain (the [[cusumDailyRevenue]] argument).
     */
   def decomposeDaily(ord: DataFrame): DataFrame = {
-    val daily = graft.CheckpointLease.track(
-      ord.groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents("o_totalprice")).as("y_cents"))
-        .localCheckpoint()) // feeds the trend window, dow means, total
+    val daily = ord.groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg(sum(cents("o_totalprice")).as("y_cents"))
+      .localCheckpoint() // feeds the trend window, dow means, total
     val h = DecomposeTrendHalfWindow
     val wTrend = Window.orderBy("day").rowsBetween(-h, h)
     val tot = daily.agg(count(lit(1)).as("n_all"),
@@ -939,12 +933,11 @@ object TimeSeries {
     * passes ride the day-level series (metadata-sized).
     */
   def seasonalAnomalies(ord: DataFrame): DataFrame = {
-    val dec = graft.CheckpointLease.track(
-      decomposeDaily(ord)
-        .select(col("day"), col("y_cents"),
-          floor(col("remainder") * lit(1000.0)).cast("long")
-            .as("rem_milli"))
-        .localCheckpoint()) // feeds the median pass AND the rejoin
+    val dec = decomposeDaily(ord)
+      .select(col("day"), col("y_cents"),
+        floor(col("remainder") * lit(1000.0)).cast("long")
+          .as("rem_milli"))
+      .localCheckpoint() // feeds the median pass AND the rejoin
     val med = dec.agg(expr("percentile(rem_milli * 2, 0.5)").as("med2"))
     val withDev = dec.crossJoin(broadcast(med))
       .withColumn("adev2",
@@ -971,10 +964,9 @@ object TimeSeries {
     * double products round once each, identically).
     */
   def dowSeasonality(ord: DataFrame): DataFrame = {
-    val daily = graft.CheckpointLease.track(
-      ord.groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(cents("o_totalprice")).as("rev_cents"))
-        .localCheckpoint()) // feeds the per-dow and total aggregates
+    val daily = ord.groupBy(col("o_orderdate").cast("date").as("day"))
+      .agg(sum(cents("o_totalprice")).as("rev_cents"))
+      .localCheckpoint() // feeds the per-dow and total aggregates
     val tot = daily.agg(count(lit(1)).as("n_total"),
       sum("rev_cents").as("sum_total"))
     daily
@@ -1023,7 +1015,7 @@ object TimeSeries {
     // materialized once: the delta union reads sessions twice, and the
     // running-sum and carry branches each read the union — without this
     // the sessionize window chain executes four times
-    val sessionsM = graft.CheckpointLease.track(sessions.localCheckpoint())
+    val sessionsM = sessions.localCheckpoint()
     val deltas = sessionsM.select(col("start_us").as("ts_us"), lit(1L).as("delta"))
       .unionAll(sessionsM.select(col("end_us").as("ts_us"), lit(-1L).as("delta")))
       .withColumn("day",

@@ -82,8 +82,8 @@ object Components {
       val next = hop(labels)
         .localCheckpoint(false) // lazy: the sum below materializes it
       val s = next.agg(sum("comp")).first().getLong(0)
-      // free the superseded iteration's checkpoint blocks — without this a
-      // long-lived session leaks block-manager storage across calls
+      // free the superseded iteration's checkpoint blocks: a call holds at
+      // most two rounds at once instead of all of them
       if (prevLabels != null)
         org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(prevLabels)
       prevLabels = if (i > 0) labels else null // initial labels: plain plan
@@ -93,9 +93,10 @@ object Components {
       i += 1
     }
     und.unpersist()
-    // the surviving iteration's checkpoint is leased: harnesses release
-    // its blocks after the query's consuming action
-    graft.CheckpointLease.track(labels)
+    // the last round is materialized, so the one before it is superseded
+    if (prevLabels != null)
+      org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(prevLabels)
+    labels
   }
 
   /** Driver-side union-find over a collected (bounded, see

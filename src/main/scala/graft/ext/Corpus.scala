@@ -308,11 +308,11 @@ object Corpus {
   def sourceMix(docs: DataFrame): DataFrame = {
     // materialized once: feeds both the totals and the output join —
     // without this the documents scan + tokenization run twice
-    val cells = graft.CheckpointLease.track(docs.groupBy("source", "lang")
+    val cells = docs.groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(length(col("text"))).as("n_chars"),
         sum(size(split(col("text"), " "))).as("n_tokens"))
-      .localCheckpoint())
+      .localCheckpoint()
     val tot = cells.agg(sum("n_docs").as("t_docs"),
       sum("n_chars").as("t_chars"))
     cells.crossJoin(broadcast(tot))
@@ -335,12 +335,12 @@ object Corpus {
     */
   def temperatureMix(docs: DataFrame): DataFrame = {
     // materialized once: feeds the totals and the output join
-    val w = graft.CheckpointLease.track(docs.groupBy("source")
+    val w = docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
       .withColumn("w_micro",
         floor(sqrt(col("n_docs").cast("double")) * lit(1000000.0))
           .cast("long"))
-      .localCheckpoint())
+      .localCheckpoint()
     val tot = w.agg(sum("n_docs").as("t_docs"), sum("w_micro").as("t_w"))
     w.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), col("w_micro"),
@@ -372,7 +372,7 @@ object Corpus {
     */
   def tokenBudgetPlan(docs: DataFrame,
       budget: Long = TokenBudget): DataFrame = {
-    val w = graft.CheckpointLease.track(docs
+    val w = docs
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("n_toks"))
       .groupBy("source")
@@ -380,7 +380,7 @@ object Corpus {
       .withColumn("w_micro",
         floor(sqrt(col("n_tokens").cast("double")) * lit(1000000.0))
           .cast("long"))
-      .localCheckpoint())
+      .localCheckpoint()
     val tot = w.agg(sum("w_micro").as("t_w"))
     w.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), col("n_tokens"), col("w_micro"),
@@ -1086,9 +1086,8 @@ object Corpus {
     // the three derived aggregates (left totals, right continuation
     // counts, type count) reuse it instead of each re-scanning the
     // corpus-sized bigram stream (plan audit: 4 corpus scans → 1)
-    val big = graft.CheckpointLease.track(
-      pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .localCheckpoint(true))
+    val big = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+      .localCheckpoint(true)
     val left = big.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n_fwd"))
     val right = big.groupBy("w2").agg(count(lit(1)).as("n_bwd"))
@@ -1135,10 +1134,9 @@ object Corpus {
     */
   private[graft] def refPknTable(docs: DataFrame,
       refSource: String = LmRefSource): DataFrame = {
-    val big = graft.CheckpointLease.track(
-      bigramStream(docs.filter(col("source") === refSource))
-        .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .localCheckpoint(true))
+    val big = bigramStream(docs.filter(col("source") === refSource))
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+      .localCheckpoint(true)
     val left = big.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n_fwd"))
     val right = big.groupBy("w2").agg(count(lit(1)).as("n_bwd"))
@@ -1335,7 +1333,7 @@ object Corpus {
         sum(when(col("p_kn").isNotNull,
             floor(col("p_kn") * lit(1000000000.0)).cast("long"))
           .otherwise(0L)).as("sum_nano"))
-    val bySrc = graft.CheckpointLease.track(counts
+    val bySrc = counts
       .join(scored, Seq("source"), "left")
       .select(col("source"), col("n_docs"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
@@ -1343,7 +1341,7 @@ object Corpus {
         coalesce(col("sum_nano"), lit(0L)).as("sum_nano"))
       .withColumn("mean_nano",
         expr("sum_nano div greatest(n_known, 1L)"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     val base = broadcast(bySrc
       .agg(sum("sum_nano").as("g_nano"), sum("n_known").as("g_known"))
       .select(expr("g_nano div greatest(g_known, 1L)").as("base_nano")))
@@ -1398,14 +1396,12 @@ object Corpus {
           |                      toks[i+1] AS w3))""".stripMargin)).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"),
         col("p.w3").as("w3"))
-    val big3 = graft.CheckpointLease.track(
-      tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))
-        .localCheckpoint(true))
+    val big3 = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))
+      .localCheckpoint(true)
     val left12 = big3.groupBy("w1", "w2")
       .agg(sum("c123").as("c12"), count(lit(1)).as("n_fwd12"))
-    val contBi = graft.CheckpointLease.track(
-      big3.groupBy("w2", "w3").agg(count(lit(1)).as("n_bwd23"))
-        .localCheckpoint(true))
+    val contBi = big3.groupBy("w2", "w3").agg(count(lit(1)).as("n_bwd23"))
+      .localCheckpoint(true)
     val mid = contBi.groupBy("w2")
       .agg(sum("n_bwd23").as("n_mid"), count(lit(1)).as("n_fwd2c"))
     val uni = contBi.groupBy("w3").agg(count(lit(1)).as("n_bwd3"))

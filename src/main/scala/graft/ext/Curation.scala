@@ -205,10 +205,9 @@ object Curation {
     // materialized ONCE: the scored projection feeds both the heap and
     // the verdict join — left lazy, the full-corpus tokenization would
     // execute twice (the ngramJaccardPairs shingle-index pattern)
-    val scored = graft.CheckpointLease.track(
-      docs.select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-        .localCheckpoint(true))
+    val scored = docs.select(col("doc_id"), col("source"),
+      size(split(col("text"), " ")).cast("long").as("n_tokens"))
+      .localCheckpoint(true)
     val keep = graft.plans.TopKPerGroup(scored, Seq("source"),
         Seq("n_tokens" -> true, "doc_id" -> false), k = cap)
       .select(col("doc_id"), lit(true).as("in_cap"))

@@ -218,7 +218,7 @@ object Dedup {
         col("ds"), "doc_a", "doc_b")).as("p"))
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).as("inter_size"))
-    val out = graft.CheckpointLease.track(inter
+    val out = inter
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
       .withColumn("union_size",
@@ -227,7 +227,7 @@ object Dedup {
         col("inter_size") * lit(1.0) / col("union_size"))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "inter_size", "union_size", "jaccard")
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     sizes.unpersist()
     if (keptFrom.isEmpty) lists.unpersist()
     out
@@ -266,7 +266,7 @@ object Dedup {
         col("ds"), "doc_a", "doc_b")).as("p"))
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).as("inter_size"))
-    val out = graft.CheckpointLease.track(inter
+    val out = inter
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("inter_size"),
@@ -278,7 +278,7 @@ object Dedup {
         when(col("sa.n") <= col("sb.n"), col("doc_a"))
           .otherwise(col("doc_b")).as("contained_doc"))
       .filter(col("containment") >= threshold)
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     sizes.unpersist()
     lists.unpersist()
     out
@@ -407,7 +407,7 @@ object Dedup {
     val arrays = positioned.groupBy("doc_id")
       .agg(sort_array(collect_list(col("shingle"))).as("shs"))
       .persist()
-    val out = graft.CheckpointLease.track(cand
+    val out = cand
       .join(arrays.select(col("doc_id").as("doc_a"),
         col("shs").as("sa")), Seq("doc_a"))
       .join(arrays.select(col("doc_id").as("doc_b"),
@@ -420,7 +420,7 @@ object Dedup {
         col("inter_size") * lit(1.0) / col("union_size"))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "inter_size", "union_size", "jaccard")
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     arrays.unpersist()
     positioned.unpersist()
     if (keptFrom.isEmpty) lists.unpersist()
@@ -568,9 +568,8 @@ object Dedup {
       .agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") >= 2)
       .select("gram")
-    val out = graft.CheckpointLease.track(
-      pos.join(dup, Seq("gram")).select("doc_id", "i")
-        .localCheckpoint(true))
+    val out = pos.join(dup, Seq("gram")).select("doc_id", "i")
+      .localCheckpoint(true)
     pos.unpersist()
     out
   }
@@ -616,9 +615,8 @@ object Dedup {
       .agg(countDistinct("doc_id").as("ndg"))
       .filter(col("ndg") >= 2)
       .select("h", "gram")
-    val out = graft.CheckpointLease.track(
-      cand.join(dup, Seq("h", "gram")).select("doc_id", "i")
-        .localCheckpoint(true))
+    val out = cand.join(dup, Seq("h", "gram")).select("doc_id", "i")
+      .localCheckpoint(true)
     cand.unpersist()
     withH.unpersist()
     out
@@ -680,12 +678,11 @@ object Dedup {
         min(struct(col("doc_id"), col("i"))).as("canon"))
       .filter(col("nd") >= 2)
       .select(col("gram"), col("canon"))
-    val out = graft.CheckpointLease.track(
-      pos.join(dup, Seq("gram"))
-        .filter(!(col("doc_id") === col("canon.doc_id") &&
-          col("i") === col("canon.i")))
-        .select("doc_id", "i")
-        .localCheckpoint(true))
+    val out = pos.join(dup, Seq("gram"))
+      .filter(!(col("doc_id") === col("canon.doc_id") &&
+        col("i") === col("canon.i")))
+      .select("doc_id", "i")
+      .localCheckpoint(true)
     pos.unpersist()
     out
   }
@@ -719,12 +716,11 @@ object Dedup {
         min(struct(col("doc_id"), col("i"))).as("canon"))
       .filter(col("ndg") >= 2)
       .select(col("h"), col("gram"), col("canon"))
-    val out = graft.CheckpointLease.track(
-      cand.join(dup, Seq("h", "gram"))
-        .filter(!(col("doc_id") === col("canon.doc_id") &&
-          col("i") === col("canon.i")))
-        .select("doc_id", "i")
-        .localCheckpoint(true))
+    val out = cand.join(dup, Seq("h", "gram"))
+      .filter(!(col("doc_id") === col("canon.doc_id") &&
+        col("i") === col("canon.i")))
+      .select("doc_id", "i")
+      .localCheckpoint(true)
     cand.unpersist()
     withH.unpersist()
     out
@@ -989,7 +985,7 @@ object Dedup {
           .stripMargin)).as("p"))
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(sum(col("p.ww")).as("dot"))
-    val out = graft.CheckpointLease.track(dots
+    val out = dots
       .join(norms.as("na"), col("doc_a") === col("na.doc_id"))
       .join(norms.as("nb"), col("doc_b") === col("nb.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("dot"),
@@ -998,7 +994,7 @@ object Dedup {
           (sqrt(col("na.n2").cast("double")) *
             sqrt(col("nb.n2").cast("double")))).as("cosine"))
       .filter(col("cosine") >= threshold)
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     norms.unpersist()
     index.unpersist()
     out
@@ -1036,14 +1032,14 @@ object Dedup {
         col("b.doc_id").as("bench_id"))
       .agg(count(lit(1)).as("shared_ngrams"))
       .filter(col("shared_ngrams") >= minShared)
-    val out = graft.CheckpointLease.track(shared
+    val out = shared
       .join(graft.plans.Layout.advisedBroadcast(bSizes, fixed = 16L),
         Seq("bench_id"))
       .withColumn("containment",
         col("shared_ngrams") * lit(1.0) / col("bench_ngrams"))
       .select("corpus_id", "bench_id", "shared_ngrams", "bench_ngrams",
         "containment")
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     bg.unpersist()
     out
   }
@@ -1232,12 +1228,11 @@ object Dedup {
         .as("sig")))
     // eager checkpoint: the (tiny) verified pair set materializes NOW,
     // which lets the shingle cache be released before this function
-    // returns; the checkpoint itself is leased so harnesses release its
-    // blocks after the consuming action (see graft.CheckpointLease)
-    val verified = graft.CheckpointLease.track(
-      jaccardForPairs(sh, cands, sizesFrom = Some(sizes))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true))
+    // returns; harnesses release the checkpoint's own blocks after the
+    // consuming action (see graft.CheckpointLease)
+    val verified = jaccardForPairs(sh, cands, sizesFrom = Some(sizes))
+      .filter(col("jaccard") >= threshold)
+      .localCheckpoint(true)
     arrs.unpersist()
     docs.join(verified.select(col("doc_b").as("doc_id")), Seq("doc_id"),
         "left_anti")
@@ -1343,10 +1338,9 @@ object Dedup {
     val sizes = arrs
       .select(col("doc_id"), size(col("sh_arr")).cast("long").as("n"))
     val cands = lshCandidatesPortable(minhashSignaturesPortableNarrow(arrs))
-    val verified = graft.CheckpointLease.track(
-      jaccardForPairs(sh, cands, sizesFrom = Some(sizes))
-        .filter(col("jaccard") >= threshold)
-        .localCheckpoint(true))
+    val verified = jaccardForPairs(sh, cands, sizesFrom = Some(sizes))
+      .filter(col("jaccard") >= threshold)
+      .localCheckpoint(true)
     arrs.unpersist()
     docs.join(verified.select(col("doc_b").as("doc_id")), Seq("doc_id"),
         "left_anti")
@@ -1376,10 +1370,9 @@ object Dedup {
     val sizes = arrs
       .select(col("doc_id"), size(col("sh_arr")).cast("long").as("n"))
     val cands = lshCandidatesPortable(minhashSignaturesPortableNarrow(arrs))
-    val verified = graft.CheckpointLease.track(
-      jaccardForPairs(sh, cands, sizesFrom = Some(sizes))
-        .filter(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b").localCheckpoint(true))
+    val verified = jaccardForPairs(sh, cands, sizesFrom = Some(sizes))
+      .filter(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b").localCheckpoint(true)
     arrs.unpersist()
     val src = docs.select(col("doc_id"), col("source"))
     val withSrc = verified
@@ -1434,7 +1427,7 @@ object Dedup {
     // nBands rows per doc) instead of re-running the signature
     // aggregation per consumer; at scale this is exactly the stored
     // index state the incremental design assumes
-    val banded = graft.CheckpointLease.track({
+    val banded = {
       val nBands = MinhashK / BandRows
       minhashSignaturesPortableNarrow(arrs).select(col("doc_id"),
         posexplode(array(
@@ -1443,7 +1436,7 @@ object Dedup {
             col("sig")(b * BandRows + r).cast("string")): _*)): _*))
         .as(Seq("band", "band_key")))
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-    }.localCheckpoint(true))
+    }.localCheckpoint(true)
     val batchB = banded.filter(col("source") === batchSource)
     val indexB = banded.filter(col("source") =!= batchSource)
     def probe(other: DataFrame, cond: Column): DataFrame =
@@ -1456,7 +1449,7 @@ object Dedup {
     val candsW = probe(batchB, col("a.doc_id") > col("b.doc_id"))
     // per-side counts materialize eagerly (tiny: ≤ one row per batch
     // doc) so the shingle cache can be released before returning — the
-    // same lease pattern as [[minhashDedupDocsPortable]]
+    // same pattern as [[minhashDedupDocsPortable]]
     def dupCounts(cands: DataFrame, prefix: String): DataFrame = {
       val nCand = cands.groupBy(col("doc_a").as("doc_id"))
         .agg(count(lit(1)).as(s"n_cand_$prefix"))
@@ -1464,8 +1457,7 @@ object Dedup {
         .filter(col("jaccard") >= threshold)
         .groupBy(col("doc_a").as("doc_id"))
         .agg(count(lit(1)).as(s"n_dup_$prefix"))
-      graft.CheckpointLease.track(
-        nCand.join(nDup, Seq("doc_id"), "left").localCheckpoint(true))
+      nCand.join(nDup, Seq("doc_id"), "left").localCheckpoint(true)
     }
     val countsX = dupCounts(candsX, "index")
     val countsW = dupCounts(candsW, "batch")
@@ -1528,7 +1520,7 @@ object Dedup {
     // subplan TWICE, and with no exchange anywhere upstream (the
     // fingerprint path is shuffle-free) Spark re-executes the full
     // md5-per-token pass per side — measured ~1.9x the query at sf0.1
-    val fp = graft.CheckpointLease.track(simhash(docs).localCheckpoint())
+    val fp = simhash(docs).localCheckpoint()
     val banded = fp.select(col("doc_id"), col("simhash"), posexplode(array(
       (0 until 4).map(b =>
         shiftright(col("simhash"), b * 8).bitwiseAND(0xFF)): _*))
@@ -1601,7 +1593,7 @@ object Dedup {
         .select(col("src_a"), col("src_b"), col("inter_size"),
           col("sa.n").as("n_a"), col("sb.n").as("n_b"),
           col("union_size"), col("jaccard"))
-      graft.CheckpointLease.track(out.localCheckpoint(true))
+      out.localCheckpoint(true)
     } finally bySource.unpersist(false)
   }
 

@@ -30,8 +30,9 @@ import graft.Tables
   * Each iteration is one shuffle join (edges ⋈ ranks on src) plus one
   * shuffle agg (groupBy dst) — the canonical distributed PageRank
   * shape; ranks are `localCheckpoint`ed per iteration so the plan stays
-  * O(1) deep, with superseded checkpoint blocks released eagerly
-  * (same discipline as [[Components.connectedComponents]]).
+  * O(1) deep. Superseded rounds are not released during the query: they
+  * are node-sized, so holding O(iterations) of them until the harness's
+  * between-queries release is cheap (see [[pagerank]]).
   */
 object Graph {
 
@@ -89,11 +90,10 @@ object Graph {
     // without this the (possibly expensive) edge derivation — here a
     // pair-explosion self-join + distinct — would re-execute per
     // iteration (measured 3x the whole query's cost at sf0.1)
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
-    val deg = graft.CheckpointLease.track(
-      edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint()) // eager: reused every iteration, cut off the scan
+    val edges = edgesIn.localCheckpoint()
+    val deg = edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint() // eager: reused every iteration, cut off the scan
     val n = deg.count()
     require(n > 0, "pagerank: empty graph")
     val teleport = Scale * 15L / (100L * n)
@@ -111,17 +111,16 @@ object Graph {
         .groupBy(col("dst").as("node"))
         .agg(sum("c").as("csum"))
       // lazy checkpoint: materializes (and caches) when the consuming
-      // action runs through it; every iteration's blocks are leased and
-      // released together after that action (node-count-sized frames, so
+      // action runs through it; every iteration's blocks stay stored until
+      // the harness's between-queries release (node-count-sized frames, so
       // holding O(iterations) of them is cheap — unlike Components, no
       // per-iteration driver action is needed here because the iteration
       // count is fixed, not convergence-tested)
-      ranks = graft.CheckpointLease.track(
-        deg.join(contribs, Seq("node"), "left")
-          .select(col("node"), col("outdeg"),
-            (lit(teleport) +
-              expr("(85 * coalesce(csum, 0L)) div 100")).as("r"))
-          .localCheckpoint(false))
+      ranks = deg.join(contribs, Seq("node"), "left")
+        .select(col("node"), col("outdeg"),
+          (lit(teleport) +
+            expr("(85 * coalesce(csum, 0L)) div 100")).as("r"))
+        .localCheckpoint(false)
     }
     ranks.select(col("node").as("part_node"), col("r").as("rank_scaled"))
   }
@@ -152,18 +151,17 @@ object Graph {
     */
   def personalizedPagerank(edgesIn: DataFrame, iterations: Int = 3,
       seedCount: Int = PprSeedCount): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
-    val deg = graft.CheckpointLease.track(
-      edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
+    val deg = edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint()
     val n = deg.count()
     require(n > 0, "personalizedPagerank: empty graph")
     val s = math.min(seedCount.toLong, n)
-    val seeds = broadcast(graft.CheckpointLease.track(
+    val seeds = broadcast(
       deg.orderBy(col("outdeg").desc, col("node")).limit(seedCount)
         .select(col("node"), lit(1L).as("seed_flag"))
-        .localCheckpoint()))
+        .localCheckpoint())
     val teleport = Scale * 15L / (100L * s)
     val bcRanks = n <= NodeBroadcastMaxRows
     var ranks = deg.join(seeds, Seq("node"), "left")
@@ -177,14 +175,13 @@ object Graph {
         .join(if (bcRanks) broadcast(contrib) else contrib, Seq("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum("c").as("csum"))
-      ranks = graft.CheckpointLease.track(
-        deg.join(contribs, Seq("node"), "left")
-          .join(seeds, Seq("node"), "left")
-          .select(col("node"), col("outdeg"),
-            (when(col("seed_flag").isNotNull, lit(teleport))
-              .otherwise(lit(0L)) +
-              expr("(85 * coalesce(csum, 0L)) div 100")).as("r"))
-          .localCheckpoint(false))
+      ranks = deg.join(contribs, Seq("node"), "left")
+        .join(seeds, Seq("node"), "left")
+        .select(col("node"), col("outdeg"),
+          (when(col("seed_flag").isNotNull, lit(teleport))
+            .otherwise(lit(0L)) +
+            expr("(85 * coalesce(csum, 0L)) div 100")).as("r"))
+        .localCheckpoint(false)
     }
     ranks.join(seeds, Seq("node"), "left")
       .select(col("node").as("part_node"), col("r").as("rank_scaled"),
@@ -213,28 +210,25 @@ object Graph {
     */
   def bfsDistances(edgesIn: DataFrame, seedCount: Int = PprSeedCount,
       rounds: Int = BfsRounds): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     val n = deg.count()
     require(n > 0, "bfsDistances: empty graph")
     def gate(df: DataFrame) =
       if (n <= NodeBroadcastMaxRows) broadcast(df) else df
-    var dist = graft.CheckpointLease.track(
-      deg.orderBy(col("outdeg").desc, col("node")).limit(seedCount)
-        .select(col("node"), lit(0L).as("dist"))
-        .localCheckpoint())
+    var dist = deg.orderBy(col("outdeg").desc, col("node")).limit(seedCount)
+      .select(col("node"), lit(0L).as("dist"))
+      .localCheckpoint()
     var frontier = dist
     for (r <- 1 to rounds) {
       val cand = edges
         .join(gate(frontier.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node")).distinct()
-      frontier = graft.CheckpointLease.track(
-        cand.join(gate(dist), Seq("node"), "left_anti")
-          .select(col("node"), lit(r.toLong).as("dist"))
-          .localCheckpoint(false))
-      dist = graft.CheckpointLease.track(
-        dist.union(frontier).localCheckpoint(false))
+      frontier = cand.join(gate(dist), Seq("node"), "left_anti")
+        .select(col("node"), lit(r.toLong).as("dist"))
+        .localCheckpoint(false)
+      dist = dist.union(frontier).localCheckpoint(false)
     }
     dist.select(col("node").as("part_node"), col("dist"))
   }
@@ -269,8 +263,7 @@ object Graph {
     */
   def labelPropagation(edgesIn: DataFrame,
       rounds: Int = LpaRounds): DataFrame =
-    labelPropagationOn(
-      graft.CheckpointLease.track(edgesIn.localCheckpoint()), rounds)
+    labelPropagationOn(edgesIn.localCheckpoint(), rounds)
 
   /** [[labelPropagation]]'s core over an ALREADY-MATERIALIZED edge list
     * — split out so composites ([[lpaModularity]]) can share ONE edge
@@ -279,10 +272,9 @@ object Graph {
     */
   private[ext] def labelPropagationOn(edges: DataFrame,
       rounds: Int): DataFrame = {
-    var labels = graft.CheckpointLease.track(
-      edges.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint())
+    var labels = edges.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node"))
+      .localCheckpoint()
     val bcLabels = labels.count() <= NodeBroadcastMaxRows
     for (_ <- 1 to rounds) {
       val lab = labels.withColumnRenamed("node", "src")
@@ -291,12 +283,11 @@ object Graph {
         .select(col("dst").as("node"), col("label"))
       // argmax(count, then min label) as ONE partial-merging aggregate:
       // max(struct(count, −label)) — no window over the message stream
-      labels = graft.CheckpointLease.track(
-        msgs.groupBy("node", "label").agg(count(lit(1)).as("c"))
-          .groupBy("node")
-          .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-          .select(col("node"), (-col("m.nl")).as("label"))
-          .localCheckpoint(false))
+      labels = msgs.groupBy("node", "label").agg(count(lit(1)).as("c"))
+        .groupBy("node")
+        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+        .select(col("node"), (-col("m.nl")).as("label"))
+        .localCheckpoint(false)
     }
     labels.select(col("node").as("part_node"), col("label"))
   }
@@ -364,7 +355,7 @@ object Graph {
     // ONE edge checkpoint feeds the LPA rounds AND the modularity
     // degree/m2/intra-edge consumers — re-checkpointing per stage would
     // write the corpus-sized edge list three times
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     modularityOfLabelsOn(edges,
       labelPropagationOn(edges, rounds)
         .select(col("part_node").as("node"), col("label").as("cluster_id")))
@@ -464,10 +455,10 @@ object Graph {
     // list below is consumed THREE times (both wedge sides + the closing
     // join) — materialize each once or the pair-explosion upstream runs
     // 3x (measured ~2.5x the whole query at sf0.1)
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
-    val rel = graft.CheckpointLease.track(
+    val edges = edgesIn.localCheckpoint()
+    val rel =
       orientedEdges(edges, bcDeg = edges.count() <= NodeBroadcastMaxRows)
-        .localCheckpoint(false))
+        .localCheckpoint(false)
     val (nOriented, packable) = orientedStats(rel)
     if (nOriented <= broadcastMaxEdges && packable) {
       // EXCHANGE-FREE fast path: both wedge legs AND the closing list
@@ -622,26 +613,24 @@ object Graph {
   def edgeJaccard(edgesIn: DataFrame, topK: Int = EdgeJaccardTopK,
       broadcastMaxEdges: Long = TriangleBroadcastMaxEdges,
       expansionBudget: Long = EdgeJaccardExpansionBudget): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val bcNodes = edges.count() <= NodeBroadcastMaxRows
-    val deg = graft.CheckpointLease.track(
-      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(false))
+    val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint(false)
     val degU = deg.select(col("node").as("u"), col("deg").as("deg_u"))
     val degV = deg.select(col("node").as("v"), col("deg").as("deg_v"))
     // undirected edges + degree bounds; best_num = 0 edges have zero
     // support and are never output candidates (the old path omitted
     // them the same way: no triangle, no support row)
-    val und = graft.CheckpointLease.track(
-      edges.filter(col("src") < col("dst"))
-        .select(col("src").as("u"), col("dst").as("v"))
-        .join(if (bcNodes) broadcast(degU) else degU, Seq("u"))
-        .join(if (bcNodes) broadcast(degV) else degV, Seq("v"))
-        .select(col("u"), col("v"), col("deg_u"), col("deg_v"),
-          (least(col("deg_u"), col("deg_v")) - 1L).as("best_num"),
-          (greatest(col("deg_u"), col("deg_v")) - 1L).as("best_den"))
-        .filter(col("best_num") > 0L)
-        .localCheckpoint(false))
+    val und = edges.filter(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("v"))
+      .join(if (bcNodes) broadcast(degU) else degU, Seq("u"))
+      .join(if (bcNodes) broadcast(degV) else degV, Seq("v"))
+      .select(col("u"), col("v"), col("deg_u"), col("deg_v"),
+        (least(col("deg_u"), col("deg_v")) - 1L).as("best_num"),
+        (greatest(col("deg_u"), col("deg_v")) - 1L).as("best_den"))
+      .filter(col("best_num") > 0L)
+      .localCheckpoint(false)
     def score(cand: DataFrame): DataFrame =
       supportFor(cand, edges)
         .join(cand.select("u", "v", "deg_u", "deg_v"), Seq("u", "v"))
@@ -707,8 +696,7 @@ object Graph {
   private[ext] def edgeJaccardFull(edges: DataFrame, bcNodes: Boolean,
       deg: DataFrame, topK: Int,
       broadcastMaxEdges: Long): DataFrame = {
-    val rel = graft.CheckpointLease.track(
-      orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false))
+    val rel = orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false)
     val (nOriented, packable) = orientedStats(rel)
     val triangles = triangleCorners(rel, nOriented, packable,
       broadcastMaxEdges)
@@ -763,7 +751,7 @@ object Graph {
     * DuckDB twin is the same label by recursive closure.
     */
   def weakComponents(edgesIn: DataFrame): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val pairs = edges.filter(col("src") < col("dst"))
       .select(col("src").as("doc_a"), col("dst").as("doc_b"))
     Components.connectedComponents(pairs)
@@ -816,24 +804,23 @@ object Graph {
     * edge list to the frontier only (keyed shuffle, broadcast-gated
     * under [[NodeBroadcastMaxRows]]), takes `min(parent)` as a
     * map-side-combinable aggregate, and anti-joins the settled set;
-    * rounds = root-set eccentricity. Superseded checkpoints are
-    * released per round — the same discipline as the components loop.
+    * rounds = root-set eccentricity. Superseded rounds are not released
+    * during the query: they are node-sized and stay stored until the
+    * harness's between-queries release, the [[pagerank]] argument.
     */
   def wccCertificate(edgesIn: DataFrame,
       maxRounds: Int = WccCertMaxRounds): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val pairs = edges.filter(col("src") < col("dst"))
       .select(col("src").as("doc_a"), col("dst").as("doc_b"))
-    val comp = graft.CheckpointLease.track(
-      Components.connectedComponents(pairs).localCheckpoint())
+    val comp = Components.connectedComponents(pairs).localCheckpoint()
     val nNodes = comp.count()
     def gate(df: DataFrame) =
       if (nNodes <= NodeBroadcastMaxRows) broadcast(df) else df
-    var settled = graft.CheckpointLease.track(
-      comp.filter(col("node") === col("comp"))
-        .select(col("node"), lit(null).cast("long").as("parent"),
-          lit(0L).as("depth"))
-        .localCheckpoint())
+    var settled = comp.filter(col("node") === col("comp"))
+      .select(col("node"), lit(null).cast("long").as("parent"),
+        lit(0L).as("depth"))
+      .localCheckpoint()
     var frontier = settled
     var r = 1
     var done = false
@@ -842,14 +829,13 @@ object Graph {
         .join(gate(frontier.select(col("node").as("dst"))), Seq("dst"))
         .groupBy(col("src").as("node"))
         .agg(min(col("dst")).as("parent"))
-      val next = graft.CheckpointLease.track(
+      val next =
         cand.join(gate(settled.select("node")), Seq("node"), "left_anti")
           .select(col("node"), col("parent"), lit(r.toLong).as("depth"))
-          .localCheckpoint(false))
+          .localCheckpoint(false)
       if (next.isEmpty) done = true
       else {
-        settled = graft.CheckpointLease.track(
-          settled.union(next).localCheckpoint(false))
+        settled = settled.union(next).localCheckpoint(false)
         frontier = next
         r += 1
       }
@@ -913,7 +899,7 @@ object Graph {
   def linkPrediction(edgesIn: DataFrame, topK: Int = LinkPredTopK,
       maxMiddleDegree: Long = LinkPredMaxMiddleDegree,
       neighborBudget: Int = LinkPredNeighborBudget): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val nEdges = edges.count()
     val bcNodes = nEdges <= NodeBroadcastMaxRows
     val deg = edges.groupBy(col("src").as("node"))
@@ -961,12 +947,11 @@ object Graph {
     */
   def clusteringCoeff(edgesIn: DataFrame,
       broadcastMaxEdges: Long = TriangleBroadcastMaxEdges): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val bcNodes = edges.count() <= NodeBroadcastMaxRows
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
-    val rel = graft.CheckpointLease.track(
-      orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false))
+    val rel = orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false)
     val (nOriented, packable) = orientedStats(rel)
     val corners = triangleCorners(rel, nOriented, packable,
       broadcastMaxEdges)
@@ -1009,7 +994,7 @@ object Graph {
   val NodeBroadcastMaxRows: Long = 10000000L
 
   def kcore(edgesIn: DataFrame, k: Int = 80, rounds: Int = 8): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     // the count is free on the just-materialized checkpoint; node-sized
     // tables (degrees, dropped sets, decrements — all bounded by the
     // node count ≤ edge count) broadcast under the gate
@@ -1034,9 +1019,8 @@ object Graph {
     * first touch only the shrinking frontier.
     */
   private def kcoreDelta(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var deg = graft.CheckpointLease.track(
-      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(false))
+    var deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint(false)
     // DATA-DEPENDENT broadcasts (r17 verdict #4): dropped/decr are
     // node-sized in the worst case (a first round can shed most of the
     // graph), not bounded by construction — gated once on the node
@@ -1050,12 +1034,11 @@ object Graph {
       val decr = edges
         .join(gate(dropped.withColumnRenamed("node", "dst")), Seq("dst"))
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("dec"))
-      deg = graft.CheckpointLease.track(
-        deg.join(gate(dropped), Seq("node"), "left_anti")
-          .join(gate(decr), Seq("node"), "left")
-          .select(col("node"),
-            (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-          .localCheckpoint(false))
+      deg = deg.join(gate(dropped), Seq("node"), "left_anti")
+        .join(gate(decr), Seq("node"), "left")
+        .select(col("node"),
+          (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
+        .localCheckpoint(false)
       dropped = deg.filter(col("deg") < k).select("node")
     }
     // final round's delta IS the output: survivors with their in-core
@@ -1082,11 +1065,11 @@ object Graph {
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("node")
-      edges = graft.CheckpointLease.track(edges
+      edges = edges
         .join(keep.withColumnRenamed("node", "src"), Seq("src"))
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"))
         .select("src", "dst")
-        .localCheckpoint(false))
+        .localCheckpoint(false)
     }
     edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_deg"))
@@ -1105,9 +1088,8 @@ object Graph {
     // materialized once: the histogram feeds both the totals and the
     // output join — without this the (expensive) edge derivation and
     // both aggregates execute twice
-    val hist = graft.CheckpointLease.track(
-      deg.groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-        .localCheckpoint())
+    val hist = deg.groupBy("degree").agg(count(lit(1)).as("n_nodes"))
+      .localCheckpoint()
     val tot = hist.agg(sum("n_nodes").as("n_total"))
     hist.crossJoin(broadcast(tot))
       .select(col("degree"), col("n_nodes"),
@@ -1167,7 +1149,7 @@ object Graph {
     * would bucket degrees first (same trade as [[hits]]).
     */
   def assortativity(edgesIn: DataFrame): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val bcDeg = edges.count() <= NodeBroadcastMaxRows
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))

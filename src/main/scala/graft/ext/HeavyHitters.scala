@@ -114,13 +114,12 @@ object HeavyHitters {
     * integer.
     */
   def countMinEstimates(docs: DataFrame, topK: Int = 20): DataFrame = {
-    val vocab = graft.CheckpointLease.track(
-      docs.select(explode(split(col("text"), " ")).as("token"))
-        .groupBy("token")
-        .agg(count(lit(1)).as("true_cnt"))
-        .withColumn("h",
-          conv(substring(md5(col("token")), 1, 8), 16, 10).cast("long"))
-        .localCheckpoint(false)) // feeds the matrix build AND the top-k
+    val vocab = docs.select(explode(split(col("text"), " ")).as("token"))
+      .groupBy("token")
+      .agg(count(lit(1)).as("true_cnt"))
+      .withColumn("h",
+        conv(substring(md5(col("token")), 1, 8), 16, 10).cast("long"))
+      .localCheckpoint(false) // feeds the matrix build AND the top-k
     val posed = vocab.select(col("true_cnt").as("cnt"),
       posexplode(array((0 until CmsDepth).map(r =>
         ((col("h") * cmsA(r) + cmsB(r)) % CmsMod) % CmsWidth): _*))
@@ -160,13 +159,12 @@ object HeavyHitters {
     */
   def countMinWidthSweep(docs: DataFrame,
       widths: Seq[Int] = CmsSweepWidths, topK: Int = 10): DataFrame = {
-    val vocab = graft.CheckpointLease.track(
-      docs.select(explode(split(col("text"), " ")).as("token"))
-        .groupBy("token")
-        .agg(count(lit(1)).as("true_cnt"))
-        .withColumn("h",
-          conv(substring(md5(col("token")), 1, 8), 16, 10).cast("long"))
-        .localCheckpoint(false))
+    val vocab = docs.select(explode(split(col("text"), " ")).as("token"))
+      .groupBy("token")
+      .agg(count(lit(1)).as("true_cnt"))
+      .withColumn("h",
+        conv(substring(md5(col("token")), 1, 8), 16, 10).cast("long"))
+      .localCheckpoint(false)
     val top = vocab.orderBy(col("true_cnt").desc, col("token")).limit(topK)
     widths.map { wd =>
       def pose(src: DataFrame, keep: Seq[Column]) = src.select(

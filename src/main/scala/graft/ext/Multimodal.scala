@@ -423,8 +423,7 @@ object Multimodal {
       "8-byte banding is only exhaustive for maxHamming <= 7")
     // materialize fingerprints once: the banded self-join consumes the
     // decode subplan twice (the simhashNearDupPairs lesson)
-    val fp = graft.CheckpointLease.track(
-      perceptualHash(imgs).toDF().localCheckpoint())
+    val fp = perceptualHash(imgs).toDF().localCheckpoint()
     val banded = fp.select(col("doc_id"), col("phash_hi"), col("phash_lo"),
       posexplode(array(
         (0 until 4).map(b =>
@@ -776,8 +775,7 @@ object Multimodal {
     */
   def audioNearDupPairs(wavs: Dataset[Asset], frameLen: Int = 160,
       maxHamming: Int = 6, maxBucket: Int = 64): DataFrame = {
-    val fp = graft.CheckpointLease.track(
-      audioFingerprint(wavs, frameLen).toDF().localCheckpoint())
+    val fp = audioFingerprint(wavs, frameLen).toDF().localCheckpoint()
     val hot = fp.groupBy("word_id", "fp")
       .agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > maxBucket)
@@ -1037,10 +1035,9 @@ object Multimodal {
   def videoNearDupPairs(docs: DataFrame, frameBytes: Int = 16,
       stride: Int = 4, deltaThreshold: Long = ShotDeltaThreshold,
       maxMismatch: Int = 1, maxBucket: Int = 64): DataFrame = {
-    val sig = graft.CheckpointLease.track(
-      videoShots(docs, frameBytes, stride, deltaThreshold)
-        .select("doc_id", "shot_id", "n_frames", "sum_bytes")
-        .localCheckpoint())
+    val sig = videoShots(docs, frameBytes, stride, deltaThreshold)
+      .select("doc_id", "shot_id", "n_frames", "sum_bytes")
+      .localCheckpoint()
     val word = Seq("shot_id", "n_frames", "sum_bytes")
     val hot = sig.groupBy(word.map(col): _*)
       .agg(count(lit(1)).as("n_docs"))

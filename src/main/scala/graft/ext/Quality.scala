@@ -212,11 +212,10 @@ object Quality {
     */
   def featureCdf(li: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val vals = graft.CheckpointLease.track(
-      li.select(col("l_returnflag"),
-          round(col("l_extendedprice") * 100).cast("long").as("pc"))
-        .groupBy("l_returnflag", "pc").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()) // feeds the run, the carry, and the totals
+    val vals = li.select(col("l_returnflag"),
+        round(col("l_extendedprice") * 100).cast("long").as("pc"))
+      .groupBy("l_returnflag", "pc").agg(count(lit(1)).as("cnt"))
+      .localCheckpoint() // feeds the run, the carry, and the totals
     val banded = vals.withColumn("band",
       length(col("pc").cast("string")).cast("int"))
     val run = banded.withColumn("run", sum("cnt").over(
@@ -296,10 +295,10 @@ object Quality {
     * never re-scanning facts — and broadcast back onto it.
     */
   def crosstabChi2(ev: DataFrame): DataFrame = {
-    val cells = graft.CheckpointLease.track(
+    val cells =
       ev.groupBy(col("event_type"), month(col("ts")).cast("long").as("month"))
         .agg(count(lit(1)).as("obs"))
-        .localCheckpoint()) // feeds both marginals, the total, and the join
+        .localCheckpoint() // feeds both marginals, the total, and the join
     val rowT = cells.groupBy("event_type").agg(sum("obs").as("row_tot"))
     val colT = cells.groupBy("month").agg(sum("obs").as("col_tot"))
     val n = cells.agg(sum("obs").as("n_total"))

@@ -42,10 +42,9 @@ object Retail {
     // sum, the band carry AND the grand total — without this the fact
     // scan + aggregate runs three times (visible as 3 Scan nodes in the
     // unfixed plan)
-    val rev = graft.CheckpointLease.track(
-      li.groupBy("l_partkey")
-        .agg(sum(cents("l_extendedprice")).as("rev_cents"))
-        .localCheckpoint())
+    val rev = li.groupBy("l_partkey")
+      .agg(sum(cents("l_extendedprice")).as("rev_cents"))
+      .localCheckpoint()
     val banded = rev.withColumn("band",
       length(col("rev_cents").cast("string")).cast("int"))
     val wBand = Window.partitionBy("band")
@@ -86,10 +85,9 @@ object Retail {
   def basketLift(li: DataFrame, minSupport: Int = 3, k: Int = 100): DataFrame = {
     // materialized once: feeds the pair self-join (twice), part counts,
     // and the order total — four scans otherwise
-    val lo = graft.CheckpointLease.track(
-      li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-        .localCheckpoint())
+    val lo = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct()
+      .localCheckpoint()
     val partCnt = lo.groupBy("pk").agg(count(lit(1)).as("n_p"))
     val total = lo.groupBy().agg(countDistinct("ok").as("n_orders"))
     val pairs = lo.as("a").join(lo.as("b"),

@@ -459,16 +459,14 @@ object Similarity {
         col("centroid_id")), "e", "en")
     // one candidate row per (query, candidate): the home cell is
     // unique, and crank tags which arm first admits it
-    val candAll = graft.CheckpointLease.track(
-      qc.join(aN, Seq("centroid_id"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), col("crank"),
-          (dot(col("q"), col("e")) / (col("qn") * col("en")))
-            .as("cosine"))
-        .localCheckpoint(true))
-    val truth = graft.CheckpointLease.track(
-      bruteForceTopK(emb).select("query_id", "neighbor_id")
-        .localCheckpoint(true))
+    val candAll = qc.join(aN, Seq("centroid_id"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("crank"),
+        (dot(col("q"), col("e")) / (col("qn") * col("en")))
+          .as("cosine"))
+      .localCheckpoint(true)
+    val truth = bruteForceTopK(emb).select("query_id", "neighbor_id")
+      .localCheckpoint(true)
     val nTrue = truth.count()
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
@@ -778,7 +776,7 @@ object Similarity {
     // same way), so each unordered pair pays ONE cosine and one
     // dedup-shuffle row, then mirrors in-pipeline — half the distinct
     // volume of the directed form
-    val cand = graft.CheckpointLease.track(a.join(b, Seq("block"))
+    val cand = a.join(b, Seq("block"))
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
         (dot(col("ea"), col("eb")) / (col("na") * col("nb")))
@@ -790,7 +788,7 @@ object Similarity {
           col("cosine")))).as("e"))
       .select(col("e.vec_a").as("vec_a"), col("e.vec_b").as("vec_b"),
         col("e.cosine").as("cosine"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     cand
   }
 
@@ -857,8 +855,7 @@ object Similarity {
     // materialize the assignment ONCE: it feeds the a-side, the b-side,
     // and the final verdict join — uncheckpointed, the corpus×codebook
     // cosine pass would execute three times (the srpEval sigs pattern)
-    val assigned = graft.CheckpointLease.track(
-      ivfAssignmentsWithCos(emb, cents).localCheckpoint(true))
+    val assigned = ivfAssignmentsWithCos(emb, cents).localCheckpoint(true)
     val a = withNorm(assigned.select(col("centroid_id"),
       col("vec_id").as("vec_a"), col("ccos").as("ccos_a"),
       col("embedding").as("ea")), "ea", "na")
@@ -903,8 +900,7 @@ object Similarity {
       epsArms: Seq[Double] = SemDedupSweepEps,
       codebook: Option[DataFrame] = None): DataFrame = {
     val cents = codebook.getOrElse(trainCentroids(emb))
-    val assigned = graft.CheckpointLease.track(
-      ivfAssignmentsWithCos(emb, cents).localCheckpoint(true))
+    val assigned = ivfAssignmentsWithCos(emb, cents).localCheckpoint(true)
     val a = withNorm(assigned.select(col("centroid_id"),
       col("vec_id").as("vec_a"), col("ccos").as("ccos_a"),
       col("embedding").as("ea")), "ea", "na")
@@ -946,10 +942,9 @@ object Similarity {
     */
   def matryoshkaEval(emb: DataFrame, k: Int = TopK,
       dims: Seq[Int] = MatryoshkaDims): DataFrame = {
-    val truth = graft.CheckpointLease.track(
-      bruteForceTopK(emb, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true))
+    val truth = bruteForceTopK(emb, k)
+      .select(col("query_id"), col("neighbor_id"))
+      .localCheckpoint(true)
     val arms = dims.map { d =>
       // each arm IS bruteForceTopK over the prefix-projected corpus —
       // same operator, same float DAG, same tie-break; the recall-1.0
@@ -1615,10 +1610,9 @@ object Similarity {
     */
   private def transformedRecallEval(emb: DataFrame, k: Int,
       name: String, transformed: DataFrame): DataFrame = {
-    val truth = graft.CheckpointLease.track(
-      bruteForceTopK(emb, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true))
+    val truth = bruteForceTopK(emb, k)
+      .select(col("query_id"), col("neighbor_id"))
+      .localCheckpoint(true)
     val nTrue = broadcast(truth.agg(count(lit(1)).as("n_true")))
     def arm(nm: String, top: DataFrame): DataFrame =
       top.join(truth, Seq("query_id", "neighbor_id"), "left_semi")
@@ -1821,11 +1815,10 @@ object Similarity {
   def lofScores(emb: DataFrame, k: Int = LofK,
       threshold: Double = LofThreshold,
       edges: Option[DataFrame] = None): DataFrame = {
-    val knn = graft.CheckpointLease.track(
-      edges.getOrElse(exactKnnEdges(emb, k))
-        .select(col("src"), col("dst"),
-          (lit(1.0) - col("cosine")).as("dist"))
-        .localCheckpoint(true))
+    val knn = edges.getOrElse(exactKnnEdges(emb, k))
+      .select(col("src"), col("dst"),
+        (lit(1.0) - col("cosine")).as("dist"))
+      .localCheckpoint(true)
     val kd = knn.groupBy("src")
       .agg(max("dist").as("kdist"), count(lit(1)).as("cnt"))
     val reach = knn
@@ -1916,7 +1909,7 @@ object Similarity {
     // work left is the ANN probe itself: the embedding fetch below is
     // a keyed equi-join of Q·C shortlist rows against the corpus, and
     // everything after runs on bounded artifacts.
-    val short = graft.CheckpointLease.track((shortlistFrom match {
+    val short = (shortlistFrom match {
       case Some(sf) =>
         sf.select(col("query_id"), col("cand_id"), col("rel"))
           .join(cands, col("cand_id") === col("vec_id"))
@@ -1936,7 +1929,7 @@ object Similarity {
               .as("rel"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= shortlist)
-    }).localCheckpoint(true))
+    }).localCheckpoint(true)
     val pair = short.as("a").join(short.as("b"),
         col("a.query_id") === col("b.query_id") &&
           col("a.cand_id") < col("b.cand_id"))
@@ -2130,10 +2123,9 @@ object Similarity {
     val seed = base.orderBy(col("vec_id")).limit(1)
       .select("vec_id", "embedding", "en").collect()(0)
     var picks = List((1, seed.getLong(0), 0.0))
-    var state = graft.CheckpointLease.track(
-      base.withColumn("dmin",
-        distTo(seed.getSeq[Float](1), seed.getDouble(2)))
-        .localCheckpoint(true))
+    var state = base.withColumn("dmin",
+      distTo(seed.getSeq[Float](1), seed.getDouble(2)))
+      .localCheckpoint(true)
     for (r <- 2 to k) {
       // the argmax row carries its own embedding/norm, so the round's
       // center fetch is the SAME top-1 job, not a second lookup
@@ -2146,7 +2138,7 @@ object Similarity {
       // narrow least-folds per scan (identical arithmetic, same picks)
       state =
         if ((r - 1) % CoresetCheckpointEvery == 0)
-          graft.CheckpointLease.track(folded.localCheckpoint(true))
+          folded.localCheckpoint(true)
         else folded
     }
     val cover = state.agg(max(col("dmin"))).collect()(0).getDouble(0)
@@ -2241,7 +2233,7 @@ object Similarity {
     val bench = withNorm(emb.filter(col("label") === benchLabel)
       .select(col("vec_id").as("bench_id"), col("embedding").as("b")),
       "b", "bn")
-    val best = graft.CheckpointLease.track(
+    val best =
       withNorm(emb.filter(col("label") =!= benchLabel), "embedding", "en")
         // advisor-gated like embeddingDecontam's bench side (r17 #4)
         .crossJoin(graft.plans.Layout.advisedBroadcast(bench,
@@ -2250,7 +2242,7 @@ object Similarity {
           (dot(col("embedding"), col("b")) / (col("en") * col("bn")))
             .as("cosine"))
         .groupBy("vec_id").agg(max("cosine").as("best_cosine"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
     val n = broadcast(best.agg(count(lit(1)).as("n_corpus")))
     val arms = broadcast(
       spark.createDataFrame(epsArms.map(Tuple1(_))).toDF("eps"))
@@ -2339,17 +2331,15 @@ object Similarity {
 
   def srpEval(emb: DataFrame,
       threshold: Double = SrpEvalThreshold): DataFrame = {
-    val sigs = graft.CheckpointLease.track(
-      srpSignatures(emb).localCheckpoint(true))
-    val truthX = graft.CheckpointLease.track(
-      embeddingNearDupPairs(emb, threshold)
-        .select(col("vec_a"), col("vec_b"))
-        .join(sigs.select(col("vec_id").as("vec_a"), col("sig").as("sa")),
-          Seq("vec_a"))
-        .join(sigs.select(col("vec_id").as("vec_b"), col("sig").as("sb")),
-          Seq("vec_b"))
-        .select(expr("sa ^ sb").as("x"))
-        .localCheckpoint(true))
+    val sigs = srpSignatures(emb).localCheckpoint(true)
+    val truthX = embeddingNearDupPairs(emb, threshold)
+      .select(col("vec_a"), col("vec_b"))
+      .join(sigs.select(col("vec_id").as("vec_a"), col("sig").as("sa")),
+        Seq("vec_a"))
+      .join(sigs.select(col("vec_id").as("vec_b"), col("sig").as("sb")),
+        Seq("vec_b"))
+      .select(expr("sa ^ sb").as("x"))
+      .localCheckpoint(true)
     val arms = SrpGeometries.map { case (nb, r) =>
       val mask = (1L << r) - 1L
       val collide = (0 until nb).map(b =>
@@ -2705,8 +2695,7 @@ object Similarity {
     */
   def pqProfile(embRaw: DataFrame): DataFrame = {
     val emb = l2normalized(embRaw)
-    val books = graft.CheckpointLease.track(
-      trainPqCodebooks(emb).localCheckpoint(true))
+    val books = trainPqCodebooks(emb).localCheckpoint(true)
     pqCodes(emb, books)
       .groupBy("vec_id")
       .agg(sort_array(collect_list(struct(col("sub_id"), col("code"),
@@ -2745,8 +2734,7 @@ object Similarity {
   def pqTopK(embRaw: DataFrame, k: Int = TopK,
       shortlist: Int = PqShortlist): DataFrame = {
     val emb = l2normalized(embRaw)
-    val books = graft.CheckpointLease.track(
-      trainPqCodebooks(emb).localCheckpoint(true))
+    val books = trainPqCodebooks(emb).localCheckpoint(true)
     val codes = pqCodes(emb, books).select("vec_id", "sub_id", "code")
     val qsubs = emb.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), posexplode(expr(
@@ -2824,11 +2812,11 @@ object Similarity {
     // codebooks in — the ivfTopK amortization contract, extended to
     // the fine quantizer.
     // coarse quantizer on the raw vectors (the ivfTopK metric)
-    val cents = coarseCodebook.getOrElse(graft.CheckpointLease.track(
-      trainCentroids(embRaw).localCheckpoint(true)))
+    val cents = coarseCodebook.getOrElse(
+      trainCentroids(embRaw).localCheckpoint(true))
     // fine quantizer on the normalized vectors (the pqTopK contract)
-    val books = pqBooks.getOrElse(graft.CheckpointLease.track(
-      trainPqCodebooks(l2normalized(embRaw)).localCheckpoint(true)))
+    val books = pqBooks.getOrElse(
+      trainPqCodebooks(l2normalized(embRaw)).localCheckpoint(true))
     // r20: coarse assignment + PQ codes fused into one narrow
     // projection — the codes ⋈ lists equi-join (two vec_id exchanges
     // of the corpus×M stream) is gone (guide §2.4)

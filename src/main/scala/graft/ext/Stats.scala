@@ -287,7 +287,7 @@ object Stats {
         .as("rev_cents"))
       .withColumn("y", expr("rev_cents div 100000"))
       .select("day", "y")
-    val dailyM = graft.CheckpointLease.track(daily.localCheckpoint())
+    val dailyM = daily.localCheckpoint()
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val lagged = (0 to maxLag).map { k =>
       dailyM.as("a")
@@ -642,14 +642,13 @@ object Stats {
   def ksEventValues(events: DataFrame, typeA: String = "click",
       typeB: String = "purchase"): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val vals = graft.CheckpointLease.track(
-      events.filter(col("event_type").isin(typeA, typeB))
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("vc"))
-        .groupBy("vc")
-        .agg(sum(when(col("event_type") === typeA, 1L).otherwise(0L)).as("ca"),
-          sum(when(col("event_type") === typeB, 1L).otherwise(0L)).as("cb"))
-        .localCheckpoint()) // feeds both the cumulative run and the totals
+    val vals = events.filter(col("event_type").isin(typeA, typeB))
+      .select(col("event_type"),
+        round(col("value") * 100).cast("long").as("vc"))
+      .groupBy("vc")
+      .agg(sum(when(col("event_type") === typeA, 1L).otherwise(0L)).as("ca"),
+        sum(when(col("event_type") === typeB, 1L).otherwise(0L)).as("cb"))
+      .localCheckpoint() // feeds both the cumulative run and the totals
     val tot = vals.agg(sum("ca").as("n_a"), sum("cb").as("n_b"))
     val cum = vals
       .withColumn("cum_a", sum("ca").over(w.orderBy("vc")
@@ -698,11 +697,10 @@ object Stats {
     */
   def dailyValueDrift(events: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val vals = graft.CheckpointLease.track(
-      events.select(to_date(col("ts")).as("day"),
-          round(col("value") * 100).cast("long").as("vc"))
-        .groupBy("day", "vc").agg(count(lit(1)).as("m"))
-        .localCheckpoint()) // feeds day CDFs, the global CDF, and totals
+    val vals = events.select(to_date(col("ts")).as("day"),
+        round(col("value") * 100).cast("long").as("vc"))
+      .groupBy("day", "vc").agg(count(lit(1)).as("m"))
+      .localCheckpoint() // feeds day CDFs, the global CDF, and totals
     val gcum = vals.groupBy("vc").agg(sum("m").as("gm"))
       .withColumn("gc", sum("gm").over(w.orderBy("vc")
         .rowsBetween(w.unboundedPreceding, w.currentRow)))

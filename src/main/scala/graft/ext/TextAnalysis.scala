@@ -542,11 +542,11 @@ object TextAnalysis {
     // aggregate and the final join — without this the corpus tokenization
     // runs a third time. The stats pass above is the unavoidable second
     // scan (a global aggregate can't share the per-doc-term grouping).
-    val tf = graft.CheckpointLease.track(withLen
+    val tf = withLen
       .select(col("doc_id"), col("dl"), explode(toks).as("term"))
       .filter(col("term").isin(query: _*))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint())
+      .localCheckpoint()
     val df = tf.groupBy("term").agg(count(lit(1)).as("doc_freq"))
     tf.join(broadcast(df), Seq("term"))
       .crossJoin(broadcast(stats))
@@ -676,11 +676,10 @@ object TextAnalysis {
   def vocabCoverage(docs: DataFrame,
       ranks: Seq[Long] = Seq(3L, 10L, 30L, 100L, 1000L, 10000L))
       : DataFrame = {
-    val tc = graft.CheckpointLease.track(
-      docs.select(explode(toks).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy("term").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()) // feeds the banded walk, the carry, the total
+    val tc = docs.select(explode(toks).as("term"))
+      .filter(length(col("term")) > 0)
+      .groupBy("term").agg(count(lit(1)).as("cnt"))
+      .localCheckpoint() // feeds the banded walk, the carry, the total
     val banded = tc.withColumn("band",
       length(col("cnt").cast("string")).cast("int"))
     val wBand = Window.partitionBy("band")
@@ -737,10 +736,9 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_pair"))
       .filter(col("n_pair") >= minCount)
     // materialized once: the unigram table feeds both endpoint joins
-    val uni = graft.CheckpointLease.track(
-      tokArrs.select(explode(col("toks")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("n_w"))
-        .localCheckpoint())
+    val uni = tokArrs.select(explode(col("toks")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("n_w"))
+      .localCheckpoint()
     val tot = uni.agg(sum("n_w").as("n_total"))
     bi.join(uni.select(col("w").as("w1"), col("n_w").as("n_w1")), Seq("w1"))
       .join(uni.select(col("w").as("w2"), col("n_w").as("n_w2")), Seq("w2"))

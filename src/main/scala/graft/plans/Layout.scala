@@ -207,11 +207,10 @@ object Layout {
         .agg(min("day").as("d_min"), max("day").as("d_max"))
         .select(lit(label).as("layout"), col("shard"), col("d_min"),
           col("d_max"))
-    val ranges = graft.CheckpointLease.track(
-      shardRanges("bykey", pmod(col("o_orderkey"), lit(PruneShards)))
-        .unionAll(shardRanges("bydate",
-          floor(col("day") / lit(40.0)).cast("long")))
-        .localCheckpoint())
+    val ranges = shardRanges("bykey", pmod(col("o_orderkey"), lit(PruneShards)))
+      .unionAll(shardRanges("bydate",
+        floor(col("day") / lit(40.0)).cast("long")))
+      .localCheckpoint()
     ranges.as("a")
       .join(ranges.as("b"),
         col("a.layout") === col("b.layout") &&

@@ -43,11 +43,11 @@ object AnnIndex {
   def buildIvfPq(embRaw: DataFrame, dir: String,
       coarseCodebook: Option[DataFrame] = None,
       pqBooks: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val cents = coarseCodebook.getOrElse(graft.CheckpointLease.track(
-      Similarity.trainCentroids(embRaw).localCheckpoint(true)))
-    val books = pqBooks.getOrElse(graft.CheckpointLease.track(
+    val cents = coarseCodebook.getOrElse(
+      Similarity.trainCentroids(embRaw).localCheckpoint(true))
+    val books = pqBooks.getOrElse(
       Similarity.trainPqCodebooks(Similarity.l2normalized(embRaw))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/coarse_codebook")
     books.coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_books")
@@ -178,11 +178,9 @@ object AnnIndex {
         s"${sys.props("user.dir")}/target/ann-index/ivfpq_append_$key"
       val base = e.filter(col("vec_id") % 5 =!= 0)
       val delta = e.filter(col("vec_id") % 5 === 0)
-      val cents = graft.CheckpointLease.track(
-        Similarity.trainCentroids(e).localCheckpoint(true))
-      val books = graft.CheckpointLease.track(
-        Similarity.trainPqCodebooks(Similarity.l2normalized(e))
-          .localCheckpoint(true))
+      val cents = Similarity.trainCentroids(e).localCheckpoint(true)
+      val books = Similarity.trainPqCodebooks(Similarity.l2normalized(e))
+        .localCheckpoint(true)
       buildIvfPq(base, dir, Some(cents), Some(books))
       appendIvfPq(s, delta, dir)
       serveIvfPqTopK(s, dir, e)

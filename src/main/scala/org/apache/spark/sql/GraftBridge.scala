@@ -50,13 +50,13 @@ object GraftBridge {
     * recorded 7-10x phantom regressions on whatever query ran late in the
     * session). Forcing a GC here moves that reclamation into the
     * untimed gap between queries; the listener-bus drain keeps the
-    * status-store backlog from growing unboundedly across queries.
+    * status-store backlog from growing unboundedly across queries. Both
+    * callers unpersist every persistent RDD first
+    * (`graft.CheckpointLease.releaseAll`).
     */
   def sessionHygiene(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     System.gc()
-    sc.listenerBus.waitUntilEmpty(5000L)
+    spark.sparkContext.listenerBus.waitUntilEmpty(5000L)
     // ContextCleaner drains its reference queue on its own thread; give
     // it a beat so block/broadcast removal doesn't overlap (and get
     // charged to) the next query's timed run

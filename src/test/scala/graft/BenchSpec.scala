@@ -85,25 +85,41 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
     assert(Bench.parseTimeLine("graph", out) === None)
   }
 
-  test("time: a non-fatal failure records -1.0 and releases the leases") {
-    val cp = spark.range(5).toDF("id").localCheckpoint(true)
-    val rdd = cp.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.get
-    val t = Bench.time(spark, "unused", (_, _) => {
-      CheckpointLease.track(cp)
+  test("time: a non-fatal failure records -1.0 and the reset frees its " +
+      "checkpoint") {
+    val rdds = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.rdd.RDD[_]]
+    val t = Bench.time(spark, "unused", (s, _) => {
+      val cp = s.range(5).toDF("id").localCheckpoint(true)
+      rdds ++= cp.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }
       throw new RuntimeException("boom")
     }, 1, 2)
     assert(t === Seq(-1.0, -1.0))
-    assert(rdd.getStorageLevel === StorageLevel.NONE)
-    // the lease list no longer holds the frame: re-pinning its RDD and
-    // releasing every lease again must leave the RDD pinned
-    rdd.persist(StorageLevel.MEMORY_ONLY)
-    CheckpointLease.releaseAll()
-    assert(rdd.getStorageLevel !== StorageLevel.NONE)
-    rdd.unpersist()
+    assert(rdds.size === 3)
+    assert(rdds.forall(_.getStorageLevel === StorageLevel.NONE))
     val ok = Bench.time(spark, "unused", (s, _) => s.range(3).toDF(), 0, 1)
     assert(ok.size === 1 && ok.head >= 0)
+  }
+
+  test("reset: no checkpoint or cache the search queries leave behind " +
+      "survives it") {
+    val sc = spark.sparkContext
+    // graph_lpa leaves eager and lazy rounds; sql_recursive and
+    // dedup_clusters also free superseded rounds by hand mid-query. The
+    // frames stay referenced across the reset, so only an unpersist (not
+    // a GC of unreachable RDDs) can empty the session's storage.
+    val held = Seq("graph_lpa", "sql_recursive", "dedup_clusters").map { q =>
+      val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      Bench.consume(df)
+      df
+    }
+    assert(sc.getPersistentRDDs.nonEmpty, "the queries stored nothing")
+    Bench.reset(spark)
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(sc.getRDDStorageInfo.isEmpty)
+    assert(held.forall(_.columns.nonEmpty))
   }
 
   test("time: a fatal error propagates from warmup and timed passes") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Dev tool (test scope, not shipped): lints the plan of every
   * registered query for scale anti-patterns —
   *
@@ -82,7 +84,7 @@ object PlanLint {
           case _ =>
         }
       } catch {
-        case e: Throwable => bad ::= s"$name: plan failed: ${e.getMessage}"
+        case NonFatal(e) => bad ::= s"$name: plan failed: ${e.getMessage}"
       }
       CheckpointLease.releaseAll()
     }

@@ -35,6 +35,18 @@ class ComponentsSpec extends SparkSpec {
     assert(got.values.forall(_ === 0L))
   }
 
+  test("distributed path: of its rounds, only the returned one stays " +
+      "stored") {
+    // path graph 0-1-...-6: seven rounds, so the loop supersedes several
+    val sc = spark.sparkContext
+    val edges = (0L until 6L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val before = sc.getPersistentRDDs.keySet
+    val out = Components.connectedComponents(edges, localThreshold = 0L)
+    assert(out.as[(Long, Long)].collect().forall(_._2 === 0L))
+    assert((sc.getPersistentRDDs.keySet -- before).size === 1)
+    graft.CheckpointLease.releaseAll()
+  }
+
   test("canonicalDocs: longest doc wins, ties break to smallest doc_id") {
     // docs 1,2 near-dup (identical text), 2 longer by n_chars -> 2 is
     // canonical of cluster 1; docs 4,5 near-dup with EQUAL n_chars ->

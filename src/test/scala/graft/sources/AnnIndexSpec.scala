@@ -84,11 +84,9 @@ class AnnIndexSpec extends SparkSpec {
     // strict subset of the 16 lists, so partial-write is observable
     val base = e.filter(col("vec_id") % 50 =!= 0)
     val delta = e.filter(col("vec_id") % 50 === 0)
-    val cents = graft.CheckpointLease.track(
-      Similarity.trainCentroids(e).localCheckpoint(true))
-    val books = graft.CheckpointLease.track(
-      Similarity.trainPqCodebooks(Similarity.l2normalized(e))
-        .localCheckpoint(true))
+    val cents = Similarity.trainCentroids(e).localCheckpoint(true)
+    val books = Similarity.trainPqCodebooks(Similarity.l2normalized(e))
+      .localCheckpoint(true)
     AnnIndex.buildIvfPq(base, adir, Some(cents), Some(books))
 
     // snapshot the per-partition file sets before the append
