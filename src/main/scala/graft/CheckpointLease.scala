@@ -34,9 +34,10 @@ import org.apache.spark.sql.SparkSession
 object CheckpointLease {
 
   /** Unpersist every persistent RDD of the active session (blocks are
-    * freed asynchronously); a no-op when no session exists. */
+    * freed asynchronously, through `GraftBridge.unpersist`); a no-op when
+    * no session exists. */
   def releaseAll(): Unit =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false)))
+        .foreach(org.apache.spark.sql.GraftBridge.unpersist))
 }

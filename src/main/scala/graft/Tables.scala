@@ -23,19 +23,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    graft.sources.Bronze.readParquet(spark, s"$sfDir/$name.parquet")
-
-  def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
-  def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
-  def customer(s: SparkSession, d: String): DataFrame  = load(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame  = load(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
-  def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
-  def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** `events.ts` has shipped as parquet TIMESTAMP(NANOS) in some fixture
-    * generations and TIMESTAMP(MICROS, isAdjustedToUTC=false) in others, so
-    * the loader adapts to whatever the footer says rather than assuming:
+  /** Loads table `name`. `events.ts` has shipped as parquet
+    * TIMESTAMP(NANOS) in some fixture generations and TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false) in others, so for `events` the loader adapts
+    * to whatever the footer says rather than assuming:
     *   - nanos (surfaces as BIGINT under the legacy nanosAsLong conf, which
     *     we set up-front — it is a no-op for non-nanos files): floor-convert
     *     to a micros timestamp, the same truncation DuckDB applies;
@@ -44,12 +35,14 @@ object Tables {
     *     entrypoint pins, so `date_format` output and DuckDB oracles agree;
     *   - TIMESTAMP: already what every downstream query expects.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
+    if (name == "events")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = graft.sources.Bronze.readParquet(spark, s"$sfDir/$name.parquet")
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case TimestampType    => raw
@@ -57,6 +50,15 @@ object Tables {
         s"events.ts: unexpected parquet-resolved type $other")
     }
   }
+
+  def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
+  def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
+  def customer(s: SparkSession, d: String): DataFrame  = load(s, d, "customer")
+  def supplier(s: SparkSession, d: String): DataFrame  = load(s, d, "supplier")
+  def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
+  def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
+  def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
+  def events(s: SparkSession, d: String): DataFrame    = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -32,23 +32,16 @@ object Pipeline {
   /** Silver zone: cleansed tables written to `$outDir/silver/<t>`. */
   def runSilver(spark: SparkSession, sfDir: String,
       outDir: String): Seq[StageResult] =
-    writeStages(outDir, "silver", silverStages(parquetRaw(spark, sfDir)))
+    writeStages(outDir, "silver", silverStages(Tables.load(spark, sfDir, _)))
 
   /** Gold zone: analytics tables written to `$outDir/gold/<t>`. */
   def runGold(spark: SparkSession, sfDir: String,
       outDir: String): Seq[StageResult] =
-    writeStages(outDir, "gold", goldStages(parquetRaw(spark, sfDir)))
+    writeStages(outDir, "gold", goldStages(Tables.load(spark, sfDir, _)))
 
   /** The raw tables the zones read: the bronze zone. */
   private val RawTables = Seq("orders", "customer", "lineitem", "part",
     "supplier", "nation", "events")
-
-  /** Loads raw table `t` from the parquet fixtures; `events` goes through
-    * its footer-adapting loader. */
-  private def parquetRaw(spark: SparkSession, sfDir: String)(
-      t: String): DataFrame =
-    if (t == "events") Tables.events(spark, sfDir)
-    else Tables.load(spark, sfDir, t)
 
   /** The silver zone's `(table, frame)` stages over raw tables from
     * `raw`. */
@@ -87,7 +80,7 @@ object Pipeline {
     * (a dropped event) fails the stage after two minutes instead of
     * hanging it.
     */
-  private[graft] def writeStages(outDir: String, zone: String,
+  private[etl] def writeStages(outDir: String, zone: String,
       stages: Seq[(String, DataFrame)]): Seq[StageResult] =
     concurrently(stages.map { case (table, df) =>
       val path = s"$outDir/$zone/$table"
@@ -108,9 +101,9 @@ object Pipeline {
     * they inherit the caller's Spark local properties (job group,
     * description, scheduler pool), and none outlives it. Build DataFrames
     * before calling: only actions belong in a task, since building one can
-    * set session conf (`Tables.events`).
+    * set session conf (`Tables.load` of `events`).
     */
-  private[graft] def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+  private[etl] def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
     val results = new Array[Either[Throwable, A]](tasks.size)
     val threads = tasks.zipWithIndex.map { case (task, i) =>
       new Thread(() => results(i) =
@@ -128,44 +121,15 @@ object Pipeline {
   private def nonEmpty(zone: String, table: String, rows: Long) =
     CheckResult(zone, table, "non_empty", rows > 0, s"rows=$rows")
 
-  /** Row count, distinct keys and null keys of one table. */
-  private[graft] case class KeyStats(rows: Long, distinct: Long,
-      nulls: Long) {
-    /** The `non_empty` and `pk_unique(key)` verdicts of the table. */
-    def uniqueChecks(zone: String, table: String,
-        key: String): Seq[CheckResult] =
-      Seq(nonEmpty(zone, table, rows),
-        CheckResult(zone, table, s"pk_unique($key)", distinct == rows,
-          s"distinct=$distinct rows=$rows"))
-  }
-
-  /** [[KeyStats]] of `df` from one aggregate: per-key counts, then one
-    * global row. A null key is one group, so it counts as one distinct
-    * value, as in `select(key).distinct()`. The query is built here; the
-    * returned function runs it.
-    */
-  private[graft] def keyStats(df: DataFrame, key: String): () => KeyStats = {
-    val q = df.groupBy(key).agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum("n"), lit(0L)), count(lit(1)),
-        coalesce(sum(when(col(key).isNull, col("n"))), lit(0L)))
-    () => {
-      val r = q.head()
-      KeyStats(r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-  }
-
   /** REAL validation (replaces the reference's echo stub): non-emptiness,
-    * primary-key uniqueness, and non-null key constraints per zone. Every
-    * table directory under `$outDir/silver` and `$outDir/gold` is checked
-    * with one query; a missing zone directory is an error.
+    * primary-key uniqueness, and non-null key constraints per zone, the
+    * keys those of [[Expectations.PrimaryKeys]] for the silver tables.
+    * Every table directory under `$outDir/silver` and `$outDir/gold` is
+    * checked with one query, a keyed table's through
+    * [[Expectations.keyStats]]; a missing zone directory is an error.
     */
   def validate(spark: SparkSession, outDir: String): Seq[CheckResult] = {
-    val keys = Map(
-      ("silver", "orders")   -> "o_orderkey",
-      ("silver", "customer") -> "c_custkey",
-      ("silver", "part")     -> "p_partkey",
-      ("silver", "supplier") -> "s_suppkey",
-      ("silver", "events")   -> "event_id")
+    val keys = Expectations.PrimaryKeys.toMap
     val checks = Seq("silver", "gold").flatMap { zone =>
       val base = new java.io.File(s"$outDir/$zone")
       if (!base.isDirectory) throw new java.io.FileNotFoundException(
@@ -174,14 +138,19 @@ object Pipeline {
         .map { dir =>
           val table = dir.getName
           val df = Bronze.readParquet(spark, dir.getPath)
-          keys.get((zone, table)) match {
+          keys.get(table).filter(_ => zone == "silver") match {
             case None => () => Seq(nonEmpty(zone, table, df.count()))
             case Some(k) =>
-              val stats = keyStats(df, k)
+              val stats = Expectations.keyStats(df, k)
               () => {
-                val s = stats()
-                s.uniqueChecks(zone, table, k) :+ CheckResult(zone, table,
-                  s"pk_not_null($k)", s.nulls == 0, s"nulls=${s.nulls}")
+                val r = stats.head()
+                val (rows, distinct, nulls) =
+                  (r.getLong(0), r.getLong(1), r.getLong(2))
+                Seq(nonEmpty(zone, table, rows),
+                  CheckResult(zone, table, s"pk_unique($k)",
+                    distinct == rows, s"distinct=$distinct rows=$rows"),
+                  CheckResult(zone, table, s"pk_not_null($k)", nulls == 0,
+                    s"nulls=$nulls"))
               }
           }
         }
@@ -222,7 +191,7 @@ object Pipeline {
   def runAllJdbc(spark: SparkSession, sfDir: String,
       url: String): Seq[String] = {
     RawTables.foreach(t =>
-      Bronze.writeJdbc(parquetRaw(spark, sfDir)(t), url, s"bronze_$t"))
+      Bronze.writeJdbc(Tables.load(spark, sfDir, t), url, s"bronze_$t"))
     def bronze(t: String): DataFrame =
       spark.read.format("jdbc").option("url", url)
         .option("dbtable", s"bronze_$t").load()

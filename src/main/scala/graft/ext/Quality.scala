@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.etl.Expectations
 
 /** Dataset profiling — the "what is in this table" scan every ingest
   * pipeline runs before trusting data: per-column row/null/distinct
@@ -355,14 +356,12 @@ object Quality {
     ("nation", "n_regionkey", "region", "r_regionkey"))
 
   /** One FK edge's audit row: fact size, orphan count (fact keys with
-    * no dim partner — LEFT ANTI against the distinct dim key), verdict.
+    * no dim partner, [[graft.etl.Expectations.orphans]]), verdict.
     */
   def fkAudit(fact: DataFrame, fkCol: String, dim: DataFrame,
       pkCol: String, label: String): DataFrame = {
     val n = fact.agg(count(lit(1)).as("n_rows"))
-    val orph = fact.select(col(fkCol).as("k"))
-      .join(dim.select(col(pkCol).as("k")).distinct(), Seq("k"), "left_anti")
-      .agg(count(lit(1)).as("n_orphans"))
+    val orph = Expectations.orphans(fact, fkCol, dim, pkCol)
     n.crossJoin(broadcast(orph))
       .select(lit(label).as("fk_edge"), col("n_rows"), col("n_orphans"),
         (col("n_orphans") === 0L).as("ok"))
@@ -371,26 +370,15 @@ object Quality {
   /** REFERENTIAL-INTEGRITY AUDIT over the whole warehouse FK graph —
     * the standing data-quality check every pipeline runs after load:
     * one row per [[FkEdges]] edge with the fact size, orphan count, and
-    * verdict. Scale shape: per edge one anti-join against the DISTINCT
-    * dim keys (dims broadcast at real sizes; the planner picks it from
-    * the scan stats) reduced to one partial-merging count — the audit's
-    * output is edges-sized, never data-sized.
+    * verdict. Scale shape: per edge one anti-join against the dim keys
+    * reduced to one partial-merging count — the audit's output is
+    * edges-sized, never data-sized.
     */
   def referentialIntegrity(s: SparkSession, d: String): DataFrame =
     FkEdges.map { case (ft, fk, dt, pk) =>
       fkAudit(Tables.load(s, d, ft), fk, Tables.load(s, d, dt), pk,
         s"$ft.$fk->$dt.$pk")
     }.reduce(_ unionAll _)
-
-  /** Declared primary keys audited by [[uniquenessAudit]] — one entry
-    * per contract table; the twin is GENERATED from this list.
-    */
-  val PrimaryKeys: Seq[(String, String)] = Seq(
-    ("region", "r_regionkey"), ("nation", "n_nationkey"),
-    ("customer", "c_custkey"), ("supplier", "s_suppkey"),
-    ("part", "p_partkey"), ("orders", "o_orderkey"),
-    ("events", "event_id"), ("documents", "doc_id"),
-    ("embeddings", "vec_id"))
 
   /** PRIMARY-KEY UNIQUENESS AUDIT — the third leg of the DQ suite
     * ([[referentialIntegrity]]: FK integrity, [[freshnessAudit]]:
@@ -399,29 +387,26 @@ object Quality {
     * and the verdict. A silver stage dedups on exactly these keys, so
     * this audit is the post-load assertion that it worked.
     *
-    * Scale shape: one count+count-distinct aggregate per table (Catalyst
-    * plans a single expand + partial-merging aggregate), output
-    * tables-sized.
+    * Each table's counts are its [[graft.etl.Expectations.keyStats]] (one
+    * aggregate, output tables-sized). The distinct-key count is
+    * `countDistinct`'s, so a null key is not a distinct value: `n_groups`
+    * less the null group.
     */
   def uniquenessAuditOn(tables: Seq[(String, DataFrame, String)])
       : DataFrame =
     tables.map { case (t, df, k) =>
-      df.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col(k)).as("n_distinct"),
-          sum(when(col(k).isNull, 1L).otherwise(0L)).as("n_null"))
+      Expectations.keyStats(df, k)
+        .withColumn("n_distinct", col("n_groups") -
+          when(col("n_null") > 0L, 1L).otherwise(0L))
         .select(lit(s"$t.$k").as("pk"), col("n_rows"), col("n_distinct"),
-          (col("n_rows") - col("n_distinct")).as("n_dup"),
-          coalesce(col("n_null"), lit(0L)).as("n_null"),
+          (col("n_rows") - col("n_distinct")).as("n_dup"), col("n_null"),
           (col("n_rows") === col("n_distinct")).as("is_unique"))
     }.reduce(_ unionAll _)
 
-  /** [[uniquenessAuditOn]] over the [[PrimaryKeys]] contract tables. */
+  /** [[uniquenessAuditOn]] over the declared primary keys. */
   def uniquenessAudit(s: SparkSession, d: String): DataFrame =
-    uniquenessAuditOn(PrimaryKeys.map { case (t, k) =>
-      val df = if (t == "events") Tables.events(s, d)
-        else Tables.load(s, d, t)
-      (t, df, k)
-    })
+    uniquenessAuditOn(Expectations.PrimaryKeys.map { case (t, k) =>
+      (t, Tables.load(s, d, t), k) })
 
   /** Monitored (table, event-time column, SLA days) triples for
     * [[freshnessAudit]]. SLAs are contract constants of the registered
@@ -467,17 +452,10 @@ object Quality {
         (col("lag_days") > col("sla_days")).as("is_stale"))
   }
 
-  /** [[freshnessAuditOn]] over the [[FreshnessSlas]] contract tables.
-    * `events` goes through [[Tables.events]] (ts normalization), the
-    * rest through the generic loader.
-    */
+  /** [[freshnessAuditOn]] over the [[FreshnessSlas]] contract tables. */
   def freshnessAudit(s: SparkSession, d: String): DataFrame =
     freshnessAuditOn(
-      FreshnessSlas.map { case (t, c, _) =>
-        val df = if (t == "events") Tables.events(s, d)
-          else Tables.load(s, d, t)
-        (t, df, c)
-      },
+      FreshnessSlas.map { case (t, c, _) => (t, Tables.load(s, d, t), c) },
       FreshnessSlas.map { case (t, _, sla) => t -> sla }.toMap)
 
   /** Driver-contract registration. Timestamps are pre-formatted to
@@ -512,15 +490,12 @@ object Quality {
     "quality_outliers" -> ((s, d) => outliers(Tables.orders(s, d))),
   )
 
-  /** [[referentialIntegrity]]'s twin, generated from the same
-    * [[FkEdges]] list — NOT EXISTS mirrors LEFT ANTI exactly (both
-    * null-safe, keys here are non-null anyway).
-    */
-  /** Uniqueness twin generated from the SAME [[PrimaryKeys]] contract
-    * list, so the audited key surface can never drift between engines.
+  /** Uniqueness twin generated from the SAME declared primary keys
+    * ([[graft.etl.Expectations.PrimaryKeys]]), so the audited key surface
+    * can never drift between engines.
     */
   private def duckUniquenessSql: String =
-    PrimaryKeys.map { case (t, k) =>
+    Expectations.PrimaryKeys.map { case (t, k) =>
       s"""SELECT '$t.$k' AS pk, count(*) AS n_rows,
          |       count(DISTINCT $k) AS n_distinct,
          |       count(*) - count(DISTINCT $k) AS n_dup,
@@ -553,6 +528,10 @@ object Quality {
        |FROM per CROSS JOIN ref""".stripMargin
   }
 
+  /** [[referentialIntegrity]]'s twin, generated from the same
+    * [[FkEdges]] list — NOT EXISTS mirrors LEFT ANTI exactly (both
+    * null-safe, keys here are non-null anyway).
+    */
   private def duckReferentialSql: String =
     FkEdges.map { case (ft, fk, dt, pk) =>
       s"""SELECT '$ft.$fk->$dt.$pk' AS fk_edge,

@@ -22,9 +22,24 @@ object GraftBridge {
     */
   def unpersistLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: execution.LogicalRDD => unpersist(l.rdd)
       case _ => ()
     }
+
+  /** Unpersist one RDD without blocking. A locally checkpointed RDD (the
+    * test `RDD.isLocallyCheckpointed` makes, which is `private[rdd]`) goes
+    * straight to `SparkContext.unpersistRDD`, the call `RDD.unpersist`
+    * makes after logging one WARN per checkpoint that its truncated
+    * lineage cannot be recomputed (known, since a superseded or
+    * between-queries checkpoint is never read again); its storage level
+    * is left as it was. Any other RDD takes `unpersist`, which also
+    * resets its storage level.
+    */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    if (rdd.checkpointData.exists(
+        _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
 
   /** Spark's file-listing filter: true for a name its file index skips
     * (`_`/`.`-prefixed, except `k=v` directories and parquet summary

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The harness mains themselves are exercised by the driver; these pin
@@ -98,7 +97,10 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
     }, 1, 2)
     assert(t === Seq(-1.0, -1.0))
     assert(rdds.size === 3)
-    assert(rdds.forall(_.getStorageLevel === StorageLevel.NONE))
+    // a released local checkpoint leaves the session's persistent set (its
+    // storage level is not reset: see GraftBridge.unpersist)
+    val persistent = spark.sparkContext.getPersistentRDDs
+    assert(rdds.forall(r => !persistent.contains(r.id)))
     val ok = Bench.time(spark, "unused", (s, _) => s.range(3).toDF(), 0, 1)
     assert(ok.size === 1 && ok.head >= 0)
   }
@@ -120,6 +122,39 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
     assert(sc.getPersistentRDDs.isEmpty)
     assert(sc.getRDDStorageInfo.isEmpty)
     assert(held.forall(_.columns.nonEmpty))
+  }
+
+  test("reset: releasing local checkpoints logs no lineage WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val sc = spark.sparkContext
+    Bench.consume(SparkEntry.queries("graph_lpa")(spark,
+      "/root/testdata/sf0.001"))
+    assert(sc.getPersistentRDDs.nonEmpty, "graph_lpa stored nothing")
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-bench-warns", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN)
+          warns.add(e.getMessage.getFormattedMessage)
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    capture.start()
+    root.addAppender(capture, null, null)
+    sc.setLogLevel("WARN")
+    try Bench.reset(spark)
+    finally {
+      sc.setLogLevel("ERROR")
+      root.removeAppender(capture.getName)
+      capture.stop()
+    }
+    val lineage = warns.toArray.toSeq.map(_.toString)
+      .filter(_.contains("locally checkpointed"))
+    assert(lineage.isEmpty, s"${lineage.size} lineage WARNs")
+    assert(sc.getPersistentRDDs.isEmpty)
   }
 
   test("time: a fatal error propagates from warmup and timed passes") {

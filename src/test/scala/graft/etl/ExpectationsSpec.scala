@@ -58,4 +58,49 @@ class ExpectationsSpec extends SparkSpec {
     assert(!plan.contains("Union"), "fused rules must not re-scan per rule")
     assert("Scan".r.findAllIn(plan).size === 1, s"one scan expected:\n$plan")
   }
+
+  test("one engine: validate, dq_uniqueness and checkUnique read the same " +
+      "key stats, and ref_integrity and fkAudit the same orphans") {
+    val out = java.nio.file.Files.createTempDirectory("graft_engine").toString
+    // keys 1, 1, null, null, 2: five rows in three groups, two null keys
+    val keyed = Seq[java.lang.Long](1L, 1L, null, null, 2L)
+      .map(k => (Option(k).map(_.toLong), "x")).toDF("o_orderkey", "v")
+    val empty = keyed.limit(0).withColumnRenamed("o_orderkey", "c_custkey")
+    // (table, key, frame, (n_rows, n_groups, n_null))
+    val tables = Seq(("orders", "o_orderkey", keyed, (5L, 3L, 2L)),
+      ("customer", "c_custkey", empty, (0L, 0L, 0L)))
+    tables.foreach { case (t, _, df, _) =>
+      df.write.parquet(s"$out/silver/$t") }
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$out/gold"))
+
+    val validated = Pipeline.validate(spark, out)
+      .map(c => (c.table, c.check) -> c.detail).toMap
+    val audit = graft.ext.Quality.uniquenessAuditOn(
+        tables.map { case (t, k, df, _) => (t, df, k) })
+      .select("pk", "n_rows", "n_distinct", "n_null")
+      .as[(String, Long, Long, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
+    tables.foreach { case (t, k, df, (rows, groups, nulls)) =>
+      assert(validated((t, s"pk_unique($k)")) ===
+        s"distinct=$groups rows=$rows", t)
+      assert(validated((t, s"pk_not_null($k)")) === s"nulls=$nulls", t)
+      // countDistinct semantics: the null group is not a distinct key
+      assert(audit(s"$t.$k") ===
+        ((rows, groups - (if (nulls > 0) 1 else 0), nulls)), t)
+      assert(Expectations.checkUnique(df, k).head().getLong(2) ===
+        rows - groups, t)
+    }
+
+    // a null child key and an orphan child key are both orphans
+    val child = orders((1L, 10L, "O", 5.0), (2L, null, "O", 5.0),
+      (3L, 99L, "O", 5.0))
+    val ref = Expectations.ordersSuite(child, customer(10L, 11L, 10L))
+      .filter(col("rule") === "ref_integrity").head().getLong(2)
+    val fk = graft.ext.Quality.fkAudit(child, "o_custkey",
+        customer(10L, 11L, 10L), "c_custkey", "e")
+      .head().getAs[Long]("n_orphans")
+    assert(ref === 2L)
+    assert(fk === ref)
+  }
 }
